@@ -166,26 +166,64 @@ class Hotspot(Workload):
         return out
 
 
-class Sims(Workload):
-    """kNN weights, then Gi* permutation inference.  Local Moran's twin
-    (``moran_local_hash_sim``, same draw kernel and Python crossing) is
-    left out to keep a run inside the time budget."""
+class SimsLoops(Workload):
+    """The permutation sims, then the iterative loops, in one session.
 
-    units = ("knn.edges", "getis.sim")
+    Sims: kNN weights, then Gi* permutation inference.  Local Moran's twin
+    (``moran_local_hash_sim``, same draw kernel and Python crossing) is
+    left out to keep a run inside the time budget.
+
+    Loops: fixed-point PageRank, connected components of the dense blob
+    pair graph, and two exact-Lloyd kernels.  ``hits_fp`` and MinHash/LSH
+    with the components of its sparse pair graph are left out for the same
+    reason (README, "What was left out").
+
+    Two timed rounds: a single round read 27% run-to-run spread (IQR over
+    median, ten seeds) on a host with CPU steal."""
+
+    units = ("knn.edges", "getis.sim", "graph.pagerank",
+             "dedup.components_dense", "kmeans.lloyd", "ann.lloyd_vec")
+    min_timed_rounds = 2
 
     def prepare(self):
-        pts = customer_points(self.spark, self.sf_dir).select(
-            "id", "x", "y", "value").persist()
-        self.input_rows = pts.count()
-        self.inputs = [pts]
-        self.pts = pts
+        spark, sf = self.spark, self.sf_dir
+        pts = customer_points(spark, sf).select("id", "x", "y", "value")
+        pages = synth_webpages(spark, sf)
+        links = host_links(pages)
+        bp = self.aux["blob_pairs"]
+        blob_pairs = spark.createDataFrame(
+            pd.DataFrame({"a": bp[:, 0], "b": bp[:, 1]}))
+        blob_docs = blob_pairs.select(F.col("a").alias("doc_id")).union(
+            blob_pairs.select("b")).distinct()
+        # integer-valued coordinates (the catalog's kmeans input form):
+        # every Lloyd mean is an exact integer sum over a count
+        key = F.col("c_custkey")
+        km_pts = load_table(spark, sf, "customer").select(
+            key.alias("id"),
+            ((key * 9973) % 24000).cast("double").alias("x"),
+            ((key * 7919) % 9600).cast("double").alias("y"))
+        emb = load_table(spark, sf, "embeddings").select("vec_id",
+                                                         "embedding")
+        self.inputs = [df.persist() for df in
+                       (pts, links, blob_pairs, blob_docs, km_pts, emb)]
+        counts = [df.count() for df in self.inputs]
+        # rows handed in: sim points, pages behind the link graph, pairs,
+        # kmeans points, vectors
+        self.input_rows = (counts[0] + self.aux["shape"]["n_docs"]
+                           + counts[2] + counts[4] + counts[5])
+        (self.pts, self.links, self.blob_pairs, self.blob_docs, self.km_pts,
+         self.emb) = self.inputs
 
     def ops(self):
         state = {}
 
         def edges():
+            # the registry lets end_round unpersist the kNN loop's blocks;
+            # left cached, the next round's identical plans would read them
+            # and skip the candidate join
             e = self._pin(row_standardize(
-                knn_edges(self.pts, k=KNN_K, cell_size=KNN_CELL)
+                knn_edges(self.pts, k=KNN_K, cell_size=KNN_CELL,
+                          persist_registry=self.cached)
                 .select("id", "nbr")))
             state["edges"] = e
             return _rows(e)
@@ -197,52 +235,14 @@ class Sims(Workload):
                 persist_registry=self.cached)
             return _rows(res)
 
-        return [("knn.edges", edges), ("getis.sim", getis)]
-
-
-class Loops(Workload):
-    """Iterative operators in one long-lived session: fixed-point PageRank,
-    connected components of the dense blob pair graph, and two exact-Lloyd
-    kernels.  ``hits_fp`` and MinHash/LSH with the components of its sparse
-    pair graph are left out to keep a run inside the time budget (README,
-    "What was left out")."""
-
-    units = ("graph.pagerank", "dedup.components_dense", "kmeans.lloyd",
-             "ann.lloyd_vec")
-
-    def prepare(self):
-        spark, sf = self.spark, self.sf_dir
-        pages = synth_webpages(spark, sf)
-        links = host_links(pages).persist()
-        bp = self.aux["blob_pairs"]
-        blob_pairs = spark.createDataFrame(
-            pd.DataFrame({"a": bp[:, 0], "b": bp[:, 1]})).persist()
-        blob_docs = blob_pairs.select(F.col("a").alias("doc_id")).union(
-            blob_pairs.select("b")).distinct().persist()
-        # integer-valued coordinates (the catalog's kmeans input form):
-        # every Lloyd mean is an exact integer sum over a count
-        key = F.col("c_custkey")
-        km_pts = load_table(spark, sf, "customer").select(
-            key.alias("id"),
-            ((key * 9973) % 24000).cast("double").alias("x"),
-            ((key * 7919) % 9600).cast("double").alias("y")).persist()
-        emb = load_table(spark, sf, "embeddings").select(
-            "vec_id", "embedding").persist()
-        self.inputs = [links, blob_pairs, blob_docs, km_pts, emb]
-        counts = [df.count() for df in self.inputs]
-        # rows handed in: pages behind the link graph, pairs, points, vectors
-        self.input_rows = (self.aux["shape"]["n_docs"] + counts[1]
-                           + counts[3] + counts[4])
-        (self.links, self.blob_pairs, self.blob_docs, self.km_pts,
-         self.emb) = self.inputs
-
-    def ops(self):
         def centroids():
             c = lloyd_vec_centroids(self.emb, n_lists=IVF_LISTS,
                                     iters=IVF_ITERS)
             return pd.DataFrame({"list_id": range(len(c)), "centroid": c})
 
         return [
+            ("knn.edges", edges),
+            ("getis.sim", getis),
             ("graph.pagerank",
              lambda: _rows(pagerank_fp(self.links, iters=GRAPH_ITERS))),
             ("dedup.components_dense",
@@ -253,34 +253,6 @@ class Loops(Workload):
                                         iters=KM_ITERS))),
             ("ann.lloyd_vec", centroids),
         ]
-
-
-class Combined(Workload):
-    """Several workloads' rounds run back to back in one session."""
-
-    parts: tuple = ()
-
-    def __init__(self, spark, sf_dir, work_dir, aux):
-        super().__init__(spark, sf_dir, work_dir, aux)
-        self.members = [cls(spark, sf_dir, work_dir, aux)
-                        for cls in self.parts]
-        self.units = tuple(u for m in self.members for u in m.units)
-
-    def prepare(self):
-        for m in self.members:
-            m.prepare()
-        self.input_rows = sum(m.input_rows for m in self.members)
-
-    def ops(self):
-        return [op for m in self.members for op in m.ops()]
-
-    def end_round(self):
-        for m in self.members:
-            m.end_round()
-
-    def release_inputs(self):
-        for m in self.members:
-            m.release_inputs()
 
 
 def _sum_units(units, metric, names):
@@ -298,17 +270,8 @@ def layer_extras(units: dict) -> dict:
     }
 
 
-class SimsLoops(Combined):
-    """The permutation sims, then the iterative loops, in one session.
-    Two timed rounds: a single ~17 s round read 27% run-to-run spread
-    (IQR over median, ten seeds) on a host with CPU steal."""
-
-    parts = (Sims, Loops)
-    min_timed_rounds = 2
-
-
 WORKLOADS = {"hotspot": Hotspot, "sims_loops": SimsLoops}
-ALL_UNITS = Hotspot.units + Sims.units + Loops.units
+ALL_UNITS = Hotspot.units + SimsLoops.units
 #: per-layer metrics besides the per-unit ones, with their units
 EXTRA_LAYER_METRICS = {
     "pipeline.features_s": "s", "pipeline.pip_s": "s",
