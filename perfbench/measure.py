@@ -78,7 +78,15 @@ def python_worker_root(root: int):
 
 class RssSampler:
     """Samples the summed RSS of the process tree in a background thread
-    and keeps the peak."""
+    and keeps the peak.
+
+    A process counts from the second sample that sees it.  The JVM starts
+    its helpers (``chmod`` for every file it writes) and the driver starts
+    ``spark-submit`` with vfork-style spawns, and until the child execs it
+    shares its parent's memory and reports the parent's RSS: a sample that
+    fell into that window counted the JVM twice (+2.6 GB in 2 of 10
+    hotspot runs).  Helpers that live shorter than a period are not counted.
+    """
 
     def __init__(self, root: int, period_s: float = 0.2):
         self.root, self.period = root, period_s
@@ -87,9 +95,12 @@ class RssSampler:
         self._t = threading.Thread(target=self._run, daemon=True)
 
     def _run(self):
+        seen = {self.root}
         while not self._stop.is_set():
-            rss = sum(st[2] for st in tree(self.root).values())
+            procs = tree(self.root)
+            rss = sum(st[2] for pid, st in procs.items() if pid in seen)
             self.peak = max(self.peak, rss)
+            seen = set(procs) | {self.root}
             self._stop.wait(self.period)
 
     def __enter__(self):
@@ -144,6 +155,23 @@ class SparkProbe:
         beans = self.jvm.java.lang.management.ManagementFactory \
             .getGarbageCollectorMXBeans()
         return sum(b.getCollectionTime() for b in beans)
+
+    def _old_gen_pools(self):
+        return [p for p in self.jvm.java.lang.management.ManagementFactory
+                .getMemoryPoolMXBeans()
+                if p.getType().toString() == "Heap memory"
+                and ("Old" in p.getName() or "Tenured" in p.getName())]
+
+    def reset_old_gen_peak(self) -> None:
+        for p in self._old_gen_pools():
+            p.resetPeakUsage()
+
+    def old_gen_peak_mb(self) -> float:
+        """Peak old-generation occupancy since the last reset: the heap's
+        long-lived data (with the garbage not yet collected), which the
+        pinned heap keeps out of the process tree's RSS."""
+        return sum(p.getPeakUsage().getUsed()
+                   for p in self._old_gen_pools()) / MB
 
     def held_bytes(self) -> int:
         return sum(i.memSize() + i.diskSize()

@@ -5,8 +5,8 @@
 Run from the root of a checkout.  The run
 
 1. starts a ``local[n]`` session pinned here (n = min(3, nproc - 1) task
-   threads, 2 GB heap, local dirs and temp files under
-   ``.perfbench_work/``), and times it;
+   threads, a 2 GB heap committed and touched at JVM start, local dirs and
+   temp files under ``.perfbench_work/``), and times it;
 2. builds the seeded inputs and their input checkpoint ``SETUPS`` times and
    keeps the median (``setup_s`` = session start + that median);
 3. runs the first round in the fresh session (``first_round_s``), then
@@ -40,6 +40,10 @@ ROOT = os.path.dirname(HERE)
 
 SETUPS = 3
 LOCAL_DIR = ".perfbench_work"
+#: JVM heap, fixed (-Xms = -Xmx) and touched at start: a heap that grows on
+#: demand puts GC timing into the process tree's RSS (hotspot runs of the
+#: same code read 1.26-1.43 GB of JVM RSS), so peak_rss_mb would not repeat
+HEAP = "2g"
 
 
 def parse(argv=None):
@@ -73,11 +77,12 @@ def session(work: str):
             os.pathsep) if p])
     builder = session_conf(
         SparkSession.builder.master(f"local[{n}]").appName("perfbench"),
-        shuffle_partitions=2 * n, driver_memory="2g")
+        shuffle_partitions=2 * n, driver_memory=HEAP)
     spark = (builder
              .config("spark.local.dir", local)
              .config("spark.driver.extraJavaOptions",
-                     f"-Djava.io.tmpdir={tmp}")
+                     f"-Djava.io.tmpdir={tmp} -Xms{HEAP} "
+                     "-XX:+AlwaysPreTouch")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.ui.retainedStages", "5000")
              .config("spark.ui.retainedJobs", "5000")
@@ -222,6 +227,7 @@ def main(argv=None) -> int:
             first = run.round()
             cpu0 = measure.tree_cpu_s(me)
             ex0 = probe.executor_totals()
+            probe.reset_old_gen_peak()
             timed_t0 = time.perf_counter()
             # whole rounds until --seconds are timed, at least the
             # workload's minimum; a traced run alternates untraced and
@@ -236,6 +242,7 @@ def main(argv=None) -> int:
             cpu_s = (measure.tree_cpu_s(me) - cpu0) / k
             shuffle_mb = (probe.executor_totals()["shuffle_w"]
                           - ex0["shuffle_w"]) / measure.MB / k
+            old_gen_peak_mb = probe.old_gen_peak_mb()
         peak_rss_mb = rss.peak / measure.MB
     finally:
         if spark is not None:
@@ -268,6 +275,7 @@ def main(argv=None) -> int:
     round_s = statistics.median(plain)
     if args.trace:
         metrics = layer_metrics(run, plain, builds)
+        metrics["jvm.old_gen_peak_mb"] = (old_gen_peak_mb, "MB")
         measure.write_spans(run, os.path.join(
             base, f"spans-{args.workload}-{args.seed}.jsonl"))
     else:
