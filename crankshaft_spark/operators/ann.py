@@ -222,12 +222,20 @@ def lloyd_vec_centroids(
     means ROUNDED to ``round_dp`` (the float pin — sums of doubles are
     order-sensitive in ulps, the round makes Spark/DuckDB/parallelism
     agree); empty lists carry their previous centroid.  Exactly mirrored by
-    ``ivf_oracle_sql``."""
+    ``ivf_oracle_sql``.
+
+    This stays a kernel of its own, apart from kmeans' column-wise
+    ``_lloyd``: its d2 is an array fold rounded to 9 dp and its means are
+    pinned with ``round_dp``, so running it through the unrounded column
+    kernel would change comparison bits and the ``ann_ivf`` oracle hash."""
     v = embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     ).cache()
     init = v.orderBy("vec_id").limit(n_lists).collect()
+    if not init:
+        v.unpersist()
+        raise ValueError("lloyd_vec_centroids: no input vectors")
     cents = [[float(x) for x in r["_v"]] for r in init]
     for _ in range(iters):
         upd = (

@@ -21,6 +21,13 @@ mapInPandas.  sklearn convention: silhouette = 0 for singleton clusters.
 Scale note: the fit shuffles k small partial-sum vectors per partition per
 iteration; per-row outputs are one broadcast join — no driver collect of data
 rows at any scale.
+
+The deterministic, DuckDB-replayable arms (kmeans_lloyd, kmeans_lloyd_best,
+kmeans_features_lloyd, and kmeans_lloyd_silhouette over kmeans_lloyd) share
+ONE exact-Lloyd kernel, ``_lloyd``: N feature columns, per-dimension weights
+(unit for the 2-d arms), one initial center list per restart, all restarts
+advancing in one stacked aggregate job per iteration.  Their oracles share
+ONE unrolled-Lloyd CTE-chain builder, ``_lloyd_sql``.
 """
 
 from __future__ import annotations
@@ -50,6 +57,7 @@ def _best_of(feat: DataFrame, k: int, max_iter: int, seed: int, n_init: int):
                    featuresCol="_feat").fit(feat)
         if best is None or m.summary.trainingCost < best.summary.trainingCost:
             best = m
+    feat.unpersist()
     return best
 
 
@@ -76,37 +84,207 @@ def kmeans_spatial(
     )
 
 
-def _nearest_center_expr(centers: list[tuple[float, float]],
-                         x: str = "x", y: str = "y"):
-    """array_min over (d2, center_idx) structs → the winning (d2, c) pair.
+# ------------------------------------------------ the one exact-Lloyd kernel ---
+
+_XY = ["x", "y"]
+_UNIT = [1.0, 1.0]
+
+
+def _points(df: DataFrame, src: list[str], cols: list[str]) -> DataFrame:
+    """(id long, *cols double) from ``src`` columns, rows with nulls dropped."""
+    return df.select(
+        F.col("id").cast("long").alias("id"),
+        *[F.col(s).cast("double").alias(c) for s, c in zip(src, cols)],
+    ).na.drop()
+
+
+def _wd2_expr(cols: list[str], center, weights) -> F.Column:
+    """Weighted squared distance Σ_d w_d·((col_d − cen_d)²), terms summed
+    in column order — the oracle formats the identical expression, so on
+    integer-valued inputs both engines produce the same double bits.  A
+    unit weight is an exact IEEE multiply, so the 2-d callers' distances
+    are the unweighted ones bit for bit."""
+    e = None
+    for c, ctr, w in zip(cols, center, weights):
+        diff = F.col(c) - F.lit(float(ctr))
+        t = F.lit(float(w)) * (diff * diff)
+        e = t if e is None else e + t
+    return e
+
+
+def _nearest_center(centers, cols, weights):
+    """array_min over (d2, center idx) structs → the winning (d2, c) pair.
 
     Lexicographic struct comparison gives the (distance asc, index asc)
-    tie-break in whole-stage codegen.  The DuckDB kmeans oracles mirror
-    this exact operand order bit-for-bit, so the expression must exist in
-    exactly ONE place — both _assign_centers and kmeans_lloyd_best's
-    stacked restarts build from here."""
+    tie-break in whole-stage codegen.  ``_lloyd_sql`` mirrors this exact
+    operand order bit-for-bit, so the expression exists in ONE place."""
     return F.array_min(F.array(*[
-        F.struct(
-            ((F.col(x) - F.lit(cx)) * (F.col(x) - F.lit(cx))
-             + (F.col(y) - F.lit(cy)) * (F.col(y) - F.lit(cy))).alias("d2"),
-            F.lit(i).alias("c"),
-        )
-        for i, (cx, cy) in enumerate(centers)
+        F.struct(_wd2_expr(cols, ctr, weights).alias("d2"),
+                 F.lit(i).alias("c"))
+        for i, ctr in enumerate(centers)
     ]))
 
 
-def _assign_centers(pts: DataFrame, centers: list[tuple[float, float]],
-                    x: str = "x", y: str = "y",
-                    keep_d2: bool = False) -> DataFrame:
-    """Nearest-center assignment as pure column algebra (see
-    _nearest_center_expr).  Centers are a bounded literal list (k entries)
-    — no join, no shuffle.  ``keep_d2`` also emits the winning squared
-    distance as ``_d2``."""
-    out = pts.withColumn("_m", _nearest_center_expr(centers, x, y))
-    out = out.withColumn("cluster", F.col("_m")["c"])
-    if keep_d2:
-        out = out.withColumn("_d2", F.col("_m")["d2"])
-    return out.drop("_m")
+def _assign(pts: DataFrame, cols, weights, centers) -> DataFrame:
+    """Nearest-center ``cluster`` column as pure column algebra — centers
+    are a bounded literal list (k entries): no join, no shuffle."""
+    return pts.withColumn(
+        "_m", _nearest_center(centers, cols, weights)
+    ).withColumn("cluster", F.col("_m")["c"]).drop("_m")
+
+
+def _init_centers(pts: DataFrame, cols, k: int, op: str, *order):
+    """The k first points under ``order`` as a center list.  orderBy+limit
+    is TakeOrderedAndProject (never a global-sort single reducer); an empty
+    result is the operator's empty-input error, so no extra job checks."""
+    rows = pts.orderBy(*order).limit(k).collect()
+    if not rows:
+        pts.unpersist()
+        raise ValueError(f"{op}: no rows with non-null id and feature values")
+    return [tuple(float(r[c]) for c in cols) for r in rows]
+
+
+def _portable_init_hash(seed: int, j: int):
+    """Keyed 32-bit md5 hash of (seed, restart j, row id) — dedup's portable
+    hash column over the keyed string (one definition of the recipe)."""
+    from crankshaft_spark.operators.dedup import _h32
+
+    return _h32(F.concat_ws(
+        ":", F.lit("km"), F.lit(str(int(seed))), F.lit(str(int(j))),
+        F.col("id").cast("string"),
+    ))
+
+
+def _hash_inits(pts: DataFrame, cols, k: int, n_init: int, seed: int,
+                op: str):
+    """Restart j's init = the k points with smallest (md5(km:seed:j:id), id)
+    — a portable SRSWOR draw, not a Mersenne sample; n_init k-row jobs."""
+    return [_init_centers(pts, cols, k, op, _portable_init_hash(seed, j), "id")
+            for j in range(n_init)]
+
+
+def _stacked(pts: DataFrame, cols, weights, centers,
+             keep_d2: bool = False) -> DataFrame:
+    """One row per (point, restart): (j, cluster[, _d2]) from restart j's
+    current centers, so all restarts advance in a SINGLE Spark job (the
+    LMFAO shape: many aggregates, one pass).  The avg/sum aggregates are
+    exact integer arithmetic, so stacking cannot move a center bit."""
+    arrs = []
+    for j, cs in enumerate(centers):
+        m = _nearest_center(cs, cols, weights)
+        fields = [F.lit(j).alias("j"), m["c"].alias("cluster")]
+        if keep_d2:
+            fields.append(m["d2"].alias("_d2"))
+        arrs.append(F.struct(*fields))
+    return pts.select(
+        "id", *cols, F.explode(F.array(*arrs)).alias("_s")
+    ).select("id", *cols, "_s.*")
+
+
+def _lloyd(pts: DataFrame, cols, weights, centers, iters: int):
+    """The exact-Lloyd kernel behind every deterministic kmeans here.
+
+    ``centers`` holds one initial center list per restart; each of the
+    ``iters`` rounds is one map-side-combined ``groupBy(j, cluster)`` mean
+    over the stacked assignment (k·restarts rows collected), and an empty
+    cluster keeps its previous center.  Returns the final center lists."""
+    for _ in range(iters):
+        upd = (
+            _stacked(pts, cols, weights, centers)
+            .groupBy("j", "cluster")
+            .agg(*[F.avg(c).alias(f"_m{d}") for d, c in enumerate(cols)])
+            .collect()
+        )
+        centers = [list(cs) for cs in centers]
+        for r in upd:
+            centers[r["j"]][r["cluster"]] = tuple(
+                float(r[f"_m{d}"]) for d in range(len(cols)))
+    return centers
+
+
+def _best_restart(pts: DataFrame, cols, weights, centers) -> tuple[int, int]:
+    """(inertia_fx, j) of the winning restart.  Restarts compare on the
+    fixed-point inertia Σ floor(d2·1000) as BIGINT — floor of bit-identical
+    doubles summed as integers, so the winner is order-independent at any
+    parallelism (a raw double Σd2 differs in ulps between engines/plans);
+    ties break on restart index."""
+    fxs = {
+        r["j"]: int(r["fx"])
+        for r in _stacked(pts, cols, weights, centers, keep_d2=True)
+        .groupBy("j")
+        .agg(F.sum(F.floor(F.col("_d2") * F.lit(1000.0)).cast("long"))
+             .alias("fx"))
+        .collect()
+    }
+    return min((fxs[j], j) for j in range(len(centers)))
+
+
+def _hash_order_sql(seed: int, j: int) -> str:
+    """DuckDB ORDER BY key of ``_portable_init_hash`` for restart j."""
+    return (f"('0x' || substring(md5(concat_ws(':', 'km', '{int(seed)}', "
+            f"'{int(j)}', CAST(id AS VARCHAR))), 1, 8))::BIGINT, id")
+
+
+def _lloyd_sql(pts_sql: str, cols: list[str], *, k: int, iters: int,
+               orders: list[str], weights_sql: str | None = None) -> str:
+    """The one unrolled-Lloyd DuckDB chain mirroring ``_lloyd``.
+
+    Restart j starts from the k points first under ``orders[j]``; each
+    round assigns by QUALIFY-style row_number over (d2, c) and updates the
+    means with empty-cluster carry-over.  ``weights_sql`` (a one-row
+    SELECT over ``pts`` naming ``w_<col>``) turns on the weighted metric.
+    Returns an open ``WITH`` ending in ``fin(init, id, c, d2)`` — every
+    restart's final assignment — and ``best(init, fx)``, the fixed-point
+    inertia winner; callers append CTEs and the final SELECT."""
+    wj = " CROSS JOIN w" if weights_sql else ""
+
+    def d2(t):
+        return " + ".join(
+            (f"w.w_{c} * " if weights_sql else "")
+            + f"((p.{c} - {t}.cx_{c})*(p.{c} - {t}.cx_{c}))"
+            for c in cols)
+
+    parts = [f"WITH pts AS MATERIALIZED ({pts_sql})"]
+    if weights_sql:
+        parts.append(f", w AS ({weights_sql})")
+    pcols = ", ".join(f"p.{c}" for c in cols)
+    ccols = ", ".join(f"{c} AS cx_{c}" for c in cols)
+    ucols = ", ".join(f"avg({c}) AS cx_{c}" for c in cols)
+    carry = ", ".join(f"coalesce(u.cx_{c}, prev.cx_{c}) AS cx_{c}"
+                      for c in cols)
+    for j, order in enumerate(orders):
+        parts.append(
+            f", r{j}c0 AS (SELECT row_number() OVER (ORDER BY {order}) - 1 "
+            f"AS c, {ccols} FROM pts ORDER BY {order} LIMIT {k})"
+        )
+        for i in range(iters):
+            prev, an, cn = f"r{j}c{i}", f"r{j}a{i + 1}", f"r{j}c{i + 1}"
+            parts.append(
+                f", {an} AS (SELECT id, {', '.join(cols)}, c FROM ("
+                f"SELECT p.id, {pcols}, {prev}.c, row_number() OVER ("
+                f"PARTITION BY p.id ORDER BY {d2(prev)} ASC, {prev}.c ASC) "
+                f"AS rk FROM pts p CROSS JOIN {prev}{wj}) WHERE rk = 1)"
+            )
+            parts.append(
+                f", {cn} AS (SELECT prev.c, {carry} FROM {prev} prev "
+                f"LEFT JOIN (SELECT c, {ucols} FROM {an} GROUP BY c) u "
+                f"USING (c))"
+            )
+        fc = f"r{j}c{iters}"
+        parts.append(
+            f", r{j}fin AS (SELECT {j} AS init, id, c, d2 FROM ("
+            f"SELECT p.id, {fc}.c, {d2(fc)} AS d2, row_number() OVER ("
+            f"PARTITION BY p.id ORDER BY {d2(fc)} ASC, {fc}.c ASC) AS rk "
+            f"FROM pts p CROSS JOIN {fc}{wj}) WHERE rk = 1)"
+        )
+    union = " UNION ALL ".join(f"SELECT * FROM r{j}fin"
+                               for j in range(len(orders)))
+    parts.append(
+        f", fin AS ({union})"
+        f", best AS (SELECT init, CAST(sum(CAST(floor(d2 * 1000.0) AS BIGINT))"
+        f" AS BIGINT) AS fx FROM fin GROUP BY init ORDER BY fx, init LIMIT 1)"
+    )
+    return "".join(parts)
 
 
 def kmeans_lloyd(
@@ -132,71 +310,20 @@ def kmeans_lloyd(
     collected); the assignment is codegen column math — no shuffle of data
     rows beyond the k-row aggregate, linear scale-up.
     """
-    pts = points.select(
-        F.col("id").cast("long").alias("id"),
-        F.col(x).cast("double").alias("x"),
-        F.col(y).cast("double").alias("y"),
-    ).na.drop()
-    init = pts.orderBy("id").limit(k).collect()
-    centers = [(float(r["x"]), float(r["y"])) for r in init]
+    pts = _points(points, [x, y], _XY)
+    init = _init_centers(pts, _XY, k, "kmeans_lloyd", "id")
     pts = pts.cache()
-    for _ in range(iters):
-        upd = (
-            _assign_centers(pts, centers)
-            .groupBy("cluster")
-            .agg(F.avg("x").alias("cx"), F.avg("y").alias("cy"))
-            .collect()
-        )
-        new = list(centers)
-        for r in upd:
-            new[r["cluster"]] = (float(r["cx"]), float(r["cy"]))
-        centers = new
+    centers = _lloyd(pts, _XY, _UNIT, [init], iters)[0]
     pts.unpersist()
-    return _assign_centers(pts, centers).select("id", "x", "y", "cluster")
+    return _assign(pts, _XY, _UNIT, centers).select("id", "x", "y", "cluster")
 
 
 def kmeans_lloyd_oracle_sql(pts_sql: str, *, k: int, iters: int = 5) -> str:
-    """DuckDB SQL computing the identical Lloyd assignment: the same pinned
-    init, per-iteration argmin (QUALIFY row_number over (d2, c)), mean
-    update with empty-cluster carry-over, unrolled ``iters`` times."""
-    d2 = ("(p.x-{t}.cx)*(p.x-{t}.cx) + (p.y-{t}.cy)*(p.y-{t}.cy)")
-    parts = [
-        f"WITH pts AS ({pts_sql}),",
-        f"c0 AS (SELECT row_number() OVER (ORDER BY id) - 1 AS c, "
-        f"x AS cx, y AS cy FROM pts ORDER BY id LIMIT {k})",
-    ]
-    for i in range(iters):
-        prev, an, cn = f"c{i}", f"a{i + 1}", f"c{i + 1}"
-        parts.append(
-            f", {an} AS (SELECT id, x, y, c FROM ("
-            f"SELECT p.id, p.x, p.y, {prev}.c, row_number() OVER ("
-            f"PARTITION BY p.id ORDER BY {d2.format(t=prev)} ASC, {prev}.c ASC"
-            f") AS rk FROM pts p CROSS JOIN {prev}) WHERE rk = 1)"
-        )
-        parts.append(
-            f", {cn} AS (SELECT prev.c, coalesce(u.cx, prev.cx) AS cx, "
-            f"coalesce(u.cy, prev.cy) AS cy FROM {prev} prev LEFT JOIN ("
-            f"SELECT c, avg(x) AS cx, avg(y) AS cy FROM {an} GROUP BY c) u "
-            f"USING (c))"
-        )
-    parts.append(
-        f" SELECT id, x, y, CAST(c AS INT) AS cluster FROM ("
-        f"SELECT p.id, p.x, p.y, c{iters}.c, row_number() OVER ("
-        f"PARTITION BY p.id ORDER BY {d2.format(t=f'c{iters}')} ASC, "
-        f"c{iters}.c ASC) AS rk FROM pts p CROSS JOIN c{iters}) WHERE rk = 1"
-    )
-    return "".join(parts)
-
-
-def _portable_init_hash(seed: int, j: int):
-    """Keyed 32-bit md5 hash of (seed, restart j, row id) — dedup's portable
-    hash column over the keyed string (one definition of the recipe)."""
-    from crankshaft_spark.operators.dedup import _h32
-
-    return _h32(F.concat_ws(
-        ":", F.lit("km"), F.lit(str(int(seed))), F.lit(str(int(j))),
-        F.col("id").cast("string"),
-    ))
+    """DuckDB SQL computing the identical Lloyd assignment: ``_lloyd_sql``
+    with the k-lowest-id init and unit weights."""
+    chain = _lloyd_sql(pts_sql, _XY, k=k, iters=iters, orders=["id"])
+    return (f"{chain} SELECT p.id, p.x, p.y, CAST(f.c AS INT) AS cluster "
+            f"FROM fin f JOIN pts p ON p.id = f.id")
 
 
 def kmeans_lloyd_best(
@@ -223,71 +350,20 @@ def kmeans_lloyd_best(
         (a raw double Σd2 would differ in ulps between engines/plans);
         ties break on restart index.
 
-    Returns (id, cluster, best_init, inertia_fx).  Scale shape: per restart
-    per iteration one map-side-combined k-row aggregate; assignment is
-    codegen column math; nothing but k-row tables and one BIGINT reach the
-    driver.
+    This is ``kmeans_features_lloyd(..., [x, y], standardize=False)``
+    under another name: the same kernel with unit weights.
+
+    Returns (id, cluster, best_init, inertia_fx).  Scale shape: per
+    iteration one map-side-combined k·n_init-row aggregate for all
+    restarts; assignment is codegen column math; nothing but k-row tables
+    and one BIGINT per restart reach the driver.
     """
-    pts = points.select(
-        F.col("id").cast("long").alias("id"),
-        F.col(x).cast("double").alias("x"),
-        F.col(y).cast("double").alias("y"),
-    ).na.drop().cache()
+    pts = _points(points, [x, y], _XY).cache()
     n_init = max(1, n_init)
-
-    def stacked(keep_d2: bool = False) -> DataFrame:
-        # one row per (point, restart): (j, cluster[, _d2]) from restart j's
-        # current centers — all restarts advance in a SINGLE Spark job per
-        # iteration instead of one driver-sequential job each (the avg/sum
-        # aggregates are exact integer arithmetic, so stacking cannot
-        # change a single center or inertia bit)
-        arrs = []
-        for j in range(n_init):
-            m = _nearest_center_expr(centers[j])
-            fields = [F.lit(j).alias("j"), m["c"].alias("cluster")]
-            if keep_d2:
-                fields.append(m["d2"].alias("_d2"))
-            arrs.append(F.struct(*fields))
-        return pts.select(
-            "id", "x", "y", F.explode(F.array(*arrs)).alias("_s")
-        ).select("id", "x", "y", "_s.*")
-
-    # per-restart hash-ranked init: orderBy+limit is TakeOrderedAndProject
-    # (never a global-sort single reducer); n_init k-row jobs
-    centers: list[list[tuple[float, float]]] = []
-    for j in range(n_init):
-        init = (
-            pts.withColumn("_h", _portable_init_hash(seed, j))
-            .orderBy("_h", "id").limit(k).collect()
-        )
-        if not init:
-            pts.unpersist()
-            raise ValueError(
-                "kmeans_lloyd_best: no rows with non-null coordinates"
-            )
-        centers.append([(float(r["x"]), float(r["y"])) for r in init])
-
-    for _ in range(iters):
-        upd = (
-            stacked()
-            .groupBy("j", "cluster")
-            .agg(F.avg("x").alias("cx"), F.avg("y").alias("cy"))
-            .collect()
-        )
-        new = [list(c) for c in centers]
-        for r in upd:
-            new[r["j"]][r["cluster"]] = (float(r["cx"]), float(r["cy"]))
-        centers = new
-    fxs = {
-        r["j"]: int(r["fx"])
-        for r in stacked(keep_d2=True)
-        .groupBy("j")
-        .agg(F.sum(F.floor(F.col("_d2") * F.lit(1000.0)).cast("long"))
-             .alias("fx"))
-        .collect()
-    }
-    fx_best, j_best = min((fxs[j], j) for j in range(n_init))
-    out = _assign_centers(pts, centers[j_best]).select(
+    inits = _hash_inits(pts, _XY, k, n_init, seed, "kmeans_lloyd_best")
+    centers = _lloyd(pts, _XY, _UNIT, inits, iters)
+    fx_best, j_best = _best_restart(pts, _XY, _UNIT, centers)
+    out = _assign(pts, _XY, _UNIT, centers[j_best]).select(
         "id", "cluster",
         F.lit(j_best).alias("best_init"),
         F.lit(fx_best).cast("long").alias("inertia_fx"),
@@ -298,62 +374,13 @@ def kmeans_lloyd_best(
 
 def kmeans_best_oracle_sql(pts_sql: str, *, k: int, iters: int = 5,
                            n_init: int = 3, seed: int = 42) -> str:
-    """DuckDB mirror of ``kmeans_lloyd_best``: per restart the same
-    hash-ranked init, the unrolled Lloyd of ``kmeans_lloyd_oracle_sql``,
-    and the fixed-point inertia; winner by (inertia_fx, restart)."""
-    d2 = "(p.x-{t}.cx)*(p.x-{t}.cx) + (p.y-{t}.cy)*(p.y-{t}.cy)"
-    parts = [f"WITH pts AS MATERIALIZED ({pts_sql})"]
-    finals = []
-    for j in range(max(1, n_init)):
-        hx = (f"('0x' || substring(md5(concat_ws(':', 'km', '{int(seed)}', "
-              f"'{int(j)}', CAST(id AS VARCHAR))), 1, 8))::BIGINT")
-        parts.append(
-            f", r{j}c0 AS (SELECT row_number() OVER (ORDER BY {hx}, id) - 1 "
-            f"AS c, x AS cx, y AS cy FROM pts ORDER BY {hx}, id LIMIT {k})"
-        )
-        for i in range(iters):
-            prev, an, cn = f"r{j}c{i}", f"r{j}a{i + 1}", f"r{j}c{i + 1}"
-            parts.append(
-                f", {an} AS (SELECT id, x, y, c FROM ("
-                f"SELECT p.id, p.x, p.y, {prev}.c, row_number() OVER ("
-                f"PARTITION BY p.id ORDER BY {d2.format(t=prev)} ASC, "
-                f"{prev}.c ASC) AS rk FROM pts p CROSS JOIN {prev}) "
-                f"WHERE rk = 1)"
-            )
-            parts.append(
-                f", {cn} AS (SELECT prev.c, coalesce(u.cx, prev.cx) AS cx, "
-                f"coalesce(u.cy, prev.cy) AS cy FROM {prev} prev LEFT JOIN ("
-                f"SELECT c, avg(x) AS cx, avg(y) AS cy FROM {an} GROUP BY c) "
-                f"u USING (c))"
-            )
-        fc = f"r{j}c{iters}"
-        parts.append(
-            f", r{j}fin AS (SELECT id, c, d2 FROM ("
-            f"SELECT p.id, {fc}.c, {d2.format(t=fc)} AS d2, "
-            f"row_number() OVER (PARTITION BY p.id ORDER BY "
-            f"{d2.format(t=fc)} ASC, {fc}.c ASC) AS rk "
-            f"FROM pts p CROSS JOIN {fc}) WHERE rk = 1)"
-        )
-        parts.append(
-            f", r{j}fx AS (SELECT {j} AS init, CAST("
-            f"sum(CAST(floor(d2 * 1000.0) AS BIGINT)) AS BIGINT) AS fx "
-            f"FROM r{j}fin)"
-        )
-        finals.append(j)
-    union_fx = " UNION ALL ".join(f"SELECT * FROM r{j}fx" for j in finals)
-    union_fin = " UNION ALL ".join(
-        f"SELECT {j} AS init, id, c FROM r{j}fin" for j in finals
-    )
-    parts.append(
-        f", best AS (SELECT init, fx FROM ({union_fx}) "
-        f"ORDER BY fx, init LIMIT 1)"
-    )
-    parts.append(
-        f" SELECT f.id, CAST(f.c AS INT) AS cluster, "
-        f"CAST(best.init AS INT) AS best_init, best.fx AS inertia_fx "
-        f"FROM ({union_fin}) f, best WHERE f.init = best.init"
-    )
-    return "".join(parts)
+    """DuckDB mirror of ``kmeans_lloyd_best``: ``_lloyd_sql`` with the
+    hash-ranked inits and unit weights; winner by (inertia_fx, restart)."""
+    orders = [_hash_order_sql(seed, j) for j in range(max(1, n_init))]
+    chain = _lloyd_sql(pts_sql, _XY, k=k, iters=iters, orders=orders)
+    return (f"{chain} SELECT f.id, CAST(f.c AS INT) AS cluster, "
+            f"CAST(best.init AS INT) AS best_init, best.fx AS inertia_fx "
+            f"FROM fin f JOIN best ON f.init = best.init")
 
 
 def _scale_pop(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -481,7 +508,7 @@ def kmeans_lloyd_silhouette(
     identity Σ d²(p, μ_C) = ssq_C − (sx_C² + sy_C²)/n_C summed in cluster
     order (sklearn convention: silhouette = 0 for singleton clusters).
     """
-    assigned = kmeans_lloyd(points, k=k, iters=iters, x=x, y=y).cache()
+    assigned = kmeans_lloyd(points, k=k, iters=iters, x=x, y=y)
     st = {
         int(r["cluster"]): (int(r["n"]), float(r["sx"]), float(r["sy"]),
                             float(r["ssq"]))
@@ -564,29 +591,13 @@ def kmeans_silhouette_oracle_sql(pts_sql: str, *, k: int,
     FROM asg JOIN ab ON ab.id = asg.id, inert"""
 
 
-# ------------------------------------------- weighted multi-dim Lloyd arm ---
-
-def _wd2_expr(cols: list[str], center, weights) -> F.Column:
-    """Weighted squared distance Σ_d w_d·((col_d − cen_d)²), terms summed
-    in column order — the oracle formats the identical expression, so on
-    integer-valued inputs both engines produce the same double bits."""
-    e = None
-    for c, ctr, w in zip(cols, center, weights):
-        diff = F.col(c) - F.lit(float(ctr))
-        t = F.lit(float(w)) * (diff * diff)
-        e = t if e is None else e + t
-    return e
-
-
-def _nearest_center_nd(centers, cols, weights):
-    """D-dim weighted twin of _nearest_center_expr: array_min over
-    (d2, center idx) structs — (distance asc, index asc) tie-break in
-    whole-stage codegen."""
-    return F.array_min(F.array(*[
-        F.struct(_wd2_expr(cols, ctr, weights).alias("d2"),
-                 F.lit(i).alias("c"))
-        for i, ctr in enumerate(centers)
-    ]))
+def _power_sums(cols: list[str]) -> list[F.Column]:
+    """n and the exact integer power sums Σx, Σx² per column."""
+    aggs = [F.count("*").alias("n")]
+    for c in cols:
+        xl = F.col(c).cast("long")
+        aggs += [F.sum(xl).alias(f"s1_{c}"), F.sum(xl * xl).alias(f"s2_{c}")]
+    return aggs
 
 
 def kmeans_features_lloyd(
@@ -614,17 +625,17 @@ def kmeans_features_lloyd(
     (Σx, Σx², n — population variance, sklearn semantics; σ²=0 → weight
     1), so the weights are bit-identical in any engine.
 
-    Everything downstream reuses the proven 2-d machinery shapes:
-    hash-ranked SRSWOR init per restart (md5 'km:seed:j:id'), stacked
-    restarts advancing in one Spark job per iteration, fixed-point
-    inertia Σ floor(d2·1000) with (fx, restart) winner selection, and the
-    sqeuclidean silhouette decomposed per dimension into cluster power
+    Everything downstream is the shared ``_lloyd`` kernel with these
+    weights: hash-ranked SRSWOR init per restart (md5 'km:seed:j:id'),
+    stacked restarts advancing in one Spark job per iteration, fixed-point
+    inertia Σ floor(d2·1000) with (fx, restart) winner selection; the
+    sqeuclidean silhouette is decomposed per dimension into cluster power
     sums (never a float sum over member pairs).  The pyspark.ml
     ``kmeans_nonspatial`` stays the reference-parity fit (k-means||,
     n_init Mersenne restarts — not replayable cross-engine by design),
     pytest-covered.
 
-    Scale shape: per restart per iteration one map-side-combined k-row
+    Scale shape: per iteration one map-side-combined k·n_init-row
     aggregate; assignment/silhouette are codegen column math over k·D
     literal terms; only k-row tables and 2·D+1 BIGINTs reach the driver.
     Exactness bounds (be honest about both): CROSS-ENGINE oracle parity
@@ -638,20 +649,11 @@ def kmeans_features_lloyd(
     at |x| ≈ 30k); past that, center bits can depend on partial-sum
     order — use coarser integer features or pre-aggregate.
     """
-    pts = df.select(
-        F.col("id").cast("long").alias("id"),
-        *[F.col(c).cast("double").alias(c) for c in cols],
-    ).na.drop().cache()
-    gaggs = [F.count("*").alias("n")]
-    for c in cols:
-        xl = F.col(c).cast("long")
-        gaggs += [F.sum(xl).alias(f"s1_{c}"), F.sum(xl * xl).alias(f"s2_{c}")]
-    g = pts.agg(*gaggs).collect()[0]
+    pts = _points(df, cols, cols).cache()
+    inits = _hash_inits(pts, cols, k, max(1, n_init), seed,
+                        "kmeans_features_lloyd")
+    g = pts.agg(*_power_sums(cols)).collect()[0]
     n = int(g["n"])
-    if n == 0:
-        pts.unpersist()
-        raise ValueError("kmeans_features_lloyd: no rows with non-null "
-                         "feature values")
     weights = []
     for c in cols:
         if standardize:
@@ -661,56 +663,13 @@ def kmeans_features_lloyd(
         else:
             weights.append(1.0)
 
-    n_init = max(1, n_init)
-    centers: list[list[tuple]] = []
-    for j in range(n_init):
-        init = (
-            pts.withColumn("_h", _portable_init_hash(seed, j))
-            .orderBy("_h", "id").limit(k).collect()
-        )
-        centers.append([tuple(float(r[c]) for c in cols) for r in init])
+    centers = _lloyd(pts, cols, weights, inits, iters)
+    fx_best, j_best = _best_restart(pts, cols, weights, centers)
+    assigned = _assign(pts, cols, weights, centers[j_best])
 
-    def stacked(keep_d2: bool = False) -> DataFrame:
-        arrs = []
-        for j in range(n_init):
-            m = _nearest_center_nd(centers[j], cols, weights)
-            fields = [F.lit(j).alias("j"), m["c"].alias("cluster")]
-            if keep_d2:
-                fields.append(m["d2"].alias("_d2"))
-            arrs.append(F.struct(*fields))
-        return pts.select(
-            "id", *cols, F.explode(F.array(*arrs)).alias("_s")
-        ).select("id", *cols, "_s.*")
-
-    for _ in range(iters):
-        upd = (
-            stacked().groupBy("j", "cluster")
-            .agg(*[F.avg(c).alias(f"c_{c}") for c in cols])
-            .collect()
-        )
-        new = [list(cn) for cn in centers]
-        for r in upd:
-            new[r["j"]][r["cluster"]] = tuple(
-                float(r[f"c_{c}"]) for c in cols)
-        centers = new
-    fxs = {
-        r["j"]: int(r["fx"])
-        for r in stacked(keep_d2=True).groupBy("j").agg(
-            F.sum(F.floor(F.col("_d2") * F.lit(1000.0)).cast("long"))
-            .alias("fx")).collect()
-    }
-    fx_best, j_best = min((fxs[j], j) for j in range(n_init))
-
-    assigned = pts.withColumn(
-        "_m", _nearest_center_nd(centers[j_best], cols, weights)
-    ).withColumn("cluster", F.col("_m")["c"]).drop("_m")
-
-    caggs = [F.count("*").alias("n")]
-    for c in cols:
-        xl = F.col(c).cast("long")
-        caggs += [F.sum(xl).alias(f"s1_{c}"), F.sum(xl * xl).alias(f"s2_{c}")]
     st = {int(r["cluster"]): r
-          for r in assigned.groupBy("cluster").agg(*caggs).collect()}
+          for r in assigned.groupBy("cluster").agg(*_power_sums(cols))
+          .collect()}
 
     def dmean(cid):
         r = st[cid]
@@ -766,93 +725,35 @@ def kmeans_features_oracle_sql(
     sums → per-dim weights, per-restart hash-ranked init, unrolled
     weighted Lloyd, fixed-point winner, per-dim silhouette decomposition.
     ``pts_sql`` must yield (id, *cols) with integer-valued columns."""
-    n_init = max(1, n_init)
-
-    def wname(c):
-        return f"w_{c}"
-
     wexprs = []
     for c in cols:
         if standardize:
             var = (f"(CAST(s2_{c} AS DOUBLE)/n - "
                    f"(CAST(s1_{c} AS DOUBLE)/n)*(CAST(s1_{c} AS DOUBLE)/n))")
             wexprs.append(f"CASE WHEN {var} > 0 THEN 1.0/{var} ELSE 1.0 END "
-                          f"AS {wname(c)}")
+                          f"AS w_{c}")
         else:
-            wexprs.append(f"1.0 AS {wname(c)}")
+            wexprs.append(f"1.0 AS w_{c}")
     gsums = ", ".join(
         f"sum(CAST({c} AS BIGINT)) AS s1_{c}, "
         f"sum(CAST({c} AS BIGINT) * CAST({c} AS BIGINT)) AS s2_{c}"
         for c in cols)
-
-    def d2(t):
-        return " + ".join(
-            f"w.{wname(c)} * ((p.{c} - {t}.cx_{c})*(p.{c} - {t}.cx_{c}))"
-            for c in cols)
-
-    parts = [
-        f"WITH pts AS MATERIALIZED ({pts_sql})",
-        f", g AS (SELECT count(*) AS n, {gsums} FROM pts)",
-        f", w AS (SELECT {', '.join(wexprs)} FROM g)",
-    ]
+    orders = [_hash_order_sql(seed, j) for j in range(max(1, n_init))]
+    chain = _lloyd_sql(
+        pts_sql, cols, k=k, iters=iters, orders=orders,
+        weights_sql=(f"SELECT {', '.join(wexprs)} FROM ("
+                     f"SELECT count(*) AS n, {gsums} FROM pts) g"))
     pcols = ", ".join(f"p.{c}" for c in cols)
-    finals = []
-    for j in range(n_init):
-        hx = (f"('0x' || substring(md5(concat_ws(':', 'km', '{int(seed)}', "
-              f"'{int(j)}', CAST(id AS VARCHAR))), 1, 8))::BIGINT")
-        ccols = ", ".join(f"{c} AS cx_{c}" for c in cols)
-        parts.append(
-            f", r{j}c0 AS (SELECT row_number() OVER (ORDER BY {hx}, id) - 1 "
-            f"AS c, {ccols} FROM pts ORDER BY {hx}, id LIMIT {k})"
-        )
-        for i in range(iters):
-            prev, an, cn = f"r{j}c{i}", f"r{j}a{i + 1}", f"r{j}c{i + 1}"
-            parts.append(
-                f", {an} AS (SELECT id, {', '.join(cols)}, c FROM ("
-                f"SELECT p.id, {pcols}, {prev}.c, row_number() OVER ("
-                f"PARTITION BY p.id ORDER BY {d2(prev)} ASC, {prev}.c ASC) "
-                f"AS rk FROM pts p CROSS JOIN {prev} CROSS JOIN w) "
-                f"WHERE rk = 1)"
-            )
-            ucols = ", ".join(f"avg({c}) AS cx_{c}" for c in cols)
-            carry = ", ".join(
-                f"coalesce(u.cx_{c}, prev.cx_{c}) AS cx_{c}" for c in cols)
-            parts.append(
-                f", {cn} AS (SELECT prev.c, {carry} FROM {prev} prev "
-                f"LEFT JOIN (SELECT c, {ucols} FROM {an} GROUP BY c) u "
-                f"USING (c))"
-            )
-        fc = f"r{j}c{iters}"
-        parts.append(
-            f", r{j}fin AS (SELECT id, c, d2 FROM ("
-            f"SELECT p.id, {fc}.c, {d2(fc)} AS d2, row_number() OVER ("
-            f"PARTITION BY p.id ORDER BY {d2(fc)} ASC, {fc}.c ASC) AS rk "
-            f"FROM pts p CROSS JOIN {fc} CROSS JOIN w) WHERE rk = 1)"
-        )
-        parts.append(
-            f", r{j}fx AS (SELECT {j} AS init, CAST("
-            f"sum(CAST(floor(d2 * 1000.0) AS BIGINT)) AS BIGINT) AS fx "
-            f"FROM r{j}fin)"
-        )
-        finals.append(j)
-    union_fx = " UNION ALL ".join(f"SELECT * FROM r{j}fx" for j in finals)
-    union_fin = " UNION ALL ".join(
-        f"SELECT {j} AS init, id, c FROM r{j}fin" for j in finals)
-    csums = ", ".join(
-        f"sum(CAST(p.{c} AS BIGINT)) AS s1_{c}, "
-        f"sum(CAST(p.{c} AS BIGINT) * CAST(p.{c} AS BIGINT)) AS s2_{c}"
-        for c in cols)
     dmean_sql = " + ".join(
-        f"w.{wname(c)} * (a.{c}*a.{c} - 2.0*(a.{c}*"
+        f"w.w_{c} * (a.{c}*a.{c} - 2.0*(a.{c}*"
         f"(CAST(s.s1_{c} AS DOUBLE)/s.n)) + CAST(s.s2_{c} AS DOUBLE)/s.n)"
         for c in cols)
-    parts.append(
-        f", best AS (SELECT init, fx FROM ({union_fx}) "
-        f"ORDER BY fx, init LIMIT 1)"
-        f", asg AS (SELECT f.id, f.c, {pcols} FROM ({union_fin}) f "
-        f"JOIN pts p ON p.id = f.id, best WHERE f.init = best.init)"
-        f", stats AS (SELECT c, count(*) AS n, {csums} "
-        f"FROM asg p GROUP BY c)"
+    return (
+        f"{chain}"
+        f", asg AS (SELECT f.id, f.c, {pcols} FROM fin f "
+        f"JOIN best ON f.init = best.init JOIN pts p ON p.id = f.id)"
+        f", stats AS (SELECT c, count(*) AS n, {gsums} "
+        f"FROM asg GROUP BY c)"
         f", prs AS (SELECT a.id, a.c AS own, s.c, s.n, "
         f"{dmean_sql} AS dmean FROM asg a CROSS JOIN stats s CROSS JOIN w)"
         f", ab AS (SELECT id, "
@@ -868,4 +769,3 @@ def kmeans_features_oracle_sql(
         f"CAST(best.init AS INT) AS best_init "
         f"FROM asg JOIN ab ON ab.id = asg.id, best"
     )
-    return "".join(parts)

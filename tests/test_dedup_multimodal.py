@@ -278,6 +278,18 @@ def test_ivf_lloyd_deterministic_across_parallelism(spark):
     assert len(a) == 5
 
 
+def test_lloyd_vec_centroids_empty_input_is_named_error(spark):
+    """No vectors → a ValueError naming the operator, from the init
+    collect, for the kernel and for ivf_index's lloyd quantizer alike."""
+    from crankshaft_spark.operators.ann import ivf_index, lloyd_vec_centroids
+
+    emb = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="lloyd_vec_centroids: no input"):
+        lloyd_vec_centroids(emb, n_lists=4)
+    with pytest.raises(ValueError, match="lloyd_vec_centroids: no input"):
+        ivf_index(emb, n_lists=4, quantizer="lloyd")
+
+
 def test_real_codec_bmp_jpeg_gif(spark):
     """BMP round-trips through the full stdlib pixel decode (bottom-up AND
     top-down row order); JPEG/GIF blobs yield real header dimensions with

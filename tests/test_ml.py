@@ -164,7 +164,9 @@ def test_kmeans_lloyd_best_matches_numpy_and_parallelism(spark):
     import hashlib
     import math
 
-    from crankshaft_spark.operators.kmeans import kmeans_lloyd_best
+    from crankshaft_spark.operators.kmeans import (
+        kmeans_features_lloyd, kmeans_lloyd_best,
+    )
 
     k, iters, n_init, seed = 5, 3, 3, 7
     rows = [(i, float((i * 97) % 113), float((i * 31) % 71))
@@ -209,6 +211,75 @@ def test_kmeans_lloyd_best_matches_numpy_and_parallelism(spark):
     assert inertia_fx == {fx_best}
     for i, rid in enumerate(ids):
         assert got[rid] == lab_best[i], rid
+
+    # the 2-d best-of Lloyd is the N-d weighted Lloyd with unit weights,
+    # row for row at any partitioning — the identity the shared kernel
+    # rests on
+    want = {r["id"]: (r["cluster"], r["best_init"], r["inertia_fx"])
+            for r in res}
+    for d in (df, df.repartition(13)):
+        assert want == {
+            r["id"]: (r["cluster_label"], r["best_init"], r["inertia_fx"])
+            for r in kmeans_features_lloyd(
+                d, ["x", "y"], k=k, iters=iters, n_init=n_init, seed=seed,
+                standardize=False).collect()}
+
+
+def test_kmeans_lloyd_empty_input_is_named_error(spark):
+    """No rows with non-null coordinates → the operator's ValueError
+    (from the init collect), for kmeans_lloyd and the silhouette built on
+    it, like their best-of siblings."""
+    from crankshaft_spark.operators.kmeans import (
+        kmeans_features_lloyd, kmeans_lloyd, kmeans_lloyd_best,
+        kmeans_lloyd_silhouette,
+    )
+
+    df = spark.createDataFrame([(1, None, 2.0)],
+                               "id long, x double, y double")
+    with pytest.raises(ValueError, match="kmeans_lloyd: no rows"):
+        kmeans_lloyd(df, k=3)
+    with pytest.raises(ValueError, match="kmeans_lloyd: no rows"):
+        kmeans_lloyd_silhouette(df.limit(0), k=3)
+    with pytest.raises(ValueError, match="kmeans_lloyd_best: no rows"):
+        kmeans_lloyd_best(df, k=3)
+    with pytest.raises(ValueError, match="kmeans_features_lloyd: no rows"):
+        kmeans_features_lloyd(df, ["x", "y"], k=3)
+
+
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("op", [
+    "kmeans_lloyd", "kmeans_lloyd_best", "kmeans_features_lloyd",
+    "kmeans_lloyd_silhouette", "kmeans_spatial", "kmeans_nonspatial",
+])
+def test_kmeans_calls_leave_no_cached_blocks(spark, op):
+    """A long session must not accumulate cached blocks: after each kmeans
+    call (output consumed) the CacheManager is empty and no RDD stays
+    persisted."""
+    from crankshaft_spark.operators import kmeans as km
+
+    rows = [(i, float((i * 97) % 113), float((i * 31) % 71))
+            for i in range(1, 121)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    calls = {
+        "kmeans_lloyd": lambda: km.kmeans_lloyd(df, k=3, iters=2),
+        "kmeans_lloyd_best": lambda: km.kmeans_lloyd_best(df, k=3, iters=2),
+        "kmeans_features_lloyd": lambda: km.kmeans_features_lloyd(
+            df, ["x", "y"], k=3, iters=2),
+        "kmeans_lloyd_silhouette": lambda: km.kmeans_lloyd_silhouette(
+            df, k=3, iters=2),
+        "kmeans_spatial": lambda: km.kmeans_spatial(
+            df, k=3, max_iter=5, n_init=2),
+        "kmeans_nonspatial": lambda: km.kmeans_nonspatial(
+            df, ["x", "y"], k=3, max_iter=5, n_init=2),
+    }
+    spark.catalog.clearCache()
+    before = _persistent_rdds(spark)
+    assert calls[op]().collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert _persistent_rdds(spark) <= before
 
 
 def test_segmentation_array_overload(spark):
