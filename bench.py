@@ -34,6 +34,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from crankshaft_spark import get_session  # noqa: E402
+from crankshaft_spark.operators._fixpoint import (  # noqa: E402
+    _checkpointed_rdd_ids, _release_rdds)
 from crankshaft_spark.plans import driver_queries  # noqa: E402
 from crankshaft_spark.plans.pipeline import hotspot_pipeline  # noqa: E402
 from crankshaft_spark.sources.webpages import synth_webpages  # noqa: E402
@@ -187,11 +189,12 @@ def main() -> None:
         spark.catalog.clearCache()
     # page_extract's iterative graph arms execute at construction, so
     # they get dedicated builders (shared link table built untimed)
-    pe = driver_queries.page_extract_arm_builders(spark, sf_dir)
+    pe, links = driver_queries.page_extract_arm_builders(spark, sf_dir)
     for v, build in pe.items():
         t0 = time.time()
         materialize(build())
         arms.setdefault("page_extract", {})[v] = round(time.time() - t0, 3)
+    _release_rdds(spark.sparkContext, _checkpointed_rdd_ids(links))
     spark.catalog.clearCache()
 
     print(json.dumps({

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crankshaft_spark.operators._fixpoint import _fixpoint, _Scope
 from crankshaft_spark.operators.text import shingles
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1
@@ -491,39 +492,6 @@ def fingerprints_oracle_sql(docs_sql: str, *, k: int = FP_K,
     FROM wmin WHERE fp = m"""
 
 
-def _checkpointed_rdd_ids(df) -> set:
-    """Id of the RDD backing a (materialized) localCheckpoint'd DataFrame.
-
-    Read off the DataFrame's own LogicalRDD plan node — NEVER by diffing
-    global RDD-storage state: a before/after diff of
-    sc.getRDDStorageInfo() captures blocks persisted CONCURRENTLY by any
-    other thread/query on the shared session, and releasing those
-    mid-flight kills the other query (localCheckpoint truncates lineage,
-    so its blocks cannot be recomputed).  Best-effort: an empty set just
-    defers cleanup to the ContextCleaner."""
-    try:
-        return {df._jdf.queryExecution().analyzed().rdd().id()}
-    except Exception:
-        return set()
-
-
-def _release_rdds(sc, ids) -> None:
-    """Best-effort release of localCheckpoint storage blocks.  Neither
-    DataFrame.unpersist() nor dropping the Python reference frees them
-    promptly (measured: blocks survive both plus an explicit JVM GC),
-    but the SparkContext's persistent-RDD registry can unpersist by id.
-    Failure here only delays cleanup to the ContextCleaner, so swallow
-    everything."""
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-    except Exception:
-        pass
-
-
 def dedup_components(
     docs: DataFrame, pairs: DataFrame, *, id_col: str = "doc_id",
     max_rounds: int = 50, keep_col: str | None = None,
@@ -580,107 +548,85 @@ def dedup_components(
         .distinct()
     )
     und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    edges = (
-        und
-        .unionByName(und.select(F.col("dst").alias("src"),
-                                F.col("src").alias("dst")))
-        .unionByName(nodes.select(F.col("id").alias("src"),
-                                  F.col("id").alias("dst")))
-        .persist()
-    )
-    edges.count()  # materialize once: every round joins this same table
-    # every round's label table is localCheckpoint'd, NOT persist'd:
-    # persist caches the data but Catalyst keeps the FULL logical plan,
-    # so an iterative loop's per-round plan grows geometrically (the jump
-    # self-joins reference the label subtree several times per level) and
-    # analysis time explodes after a few rounds (measured: round 4 at
-    # sf0.1 took 157 s with persist, constant ~2 s with the checkpoint).
-    sc = docs.sparkSession.sparkContext
-    labels = nodes.select("id", F.col("id").alias("lbl")).localCheckpoint(
-        eager=True)
-    prev_ids = _checkpointed_rdd_ids(labels)
-    for _ in range(max_rounds):
-        prop = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .groupBy(edges["dst"].alias("id"))
-            .agg(F.min("lbl").alias("lbl"))
+    with _Scope(docs.sparkSession) as scope:
+        edges = scope.cut(
+            und
+            .unionByName(und.select(F.col("dst").alias("src"),
+                                    F.col("src").alias("dst")))
+            .unionByName(nodes.select(F.col("id").alias("src"),
+                                      F.col("id").alias("dst")))
         )
-        # two pointer jumps per round: each jump is one tiny self-join on
-        # the round's label table, but every ROUND costs a full Spark
-        # action (the convergence count), so trading joins for rounds
-        # cuts the dominant fixed cost.  lbl <- min(lbl, lbl(lbl)) is
-        # monotone toward the component min, so the fixpoint — which
-        # defines the result — is unchanged.
-        cur = prop
-        for _ in range(2):
-            jump = cur.select(F.col("id").alias("jid"),
-                              F.col("lbl").alias("jlbl"))
+
+        def step(labels: DataFrame, _k: int) -> DataFrame:
             cur = (
-                cur.alias("c")
-                .join(jump.alias("j"), F.col("c.lbl") == F.col("j.jid"))
-                .select(F.col("c.id").alias("id"),
-                        F.least(F.col("c.lbl"), F.col("j.jlbl"))
-                         .alias("lbl"))
+                edges.join(labels, edges["src"] == labels["id"])
+                .groupBy(edges["dst"].alias("id"))
+                .agg(F.min("lbl").alias("lbl"))
             )
-        new = cur.localCheckpoint(eager=False)
-        changed = (
-            new.join(labels.withColumnRenamed("lbl", "plbl"), "id")
-            .where(F.col("lbl") != F.col("plbl")).count()
+            # two pointer jumps per round: each jump is one tiny self-join
+            # on the round's label table, but every ROUND costs a full
+            # Spark action (the convergence count), so trading joins for
+            # rounds cuts the dominant fixed cost.  lbl <- min(lbl,
+            # lbl(lbl)) is monotone toward the component min, so the
+            # fixpoint — which defines the result — is unchanged.
+            for _ in range(2):
+                jump = cur.select(F.col("id").alias("jid"),
+                                  F.col("lbl").alias("jlbl"))
+                cur = (
+                    cur.alias("c")
+                    .join(jump.alias("j"), F.col("c.lbl") == F.col("j.jid"))
+                    .select(F.col("c.id").alias("id"),
+                            F.least(F.col("c.lbl"), F.col("j.jlbl"))
+                             .alias("lbl"))
+                )
+            return cur
+
+        def unchanged(new: DataFrame, labels: DataFrame) -> bool:
+            both = new.join(labels.withColumnRenamed("lbl", "plbl"), "id")
+            return both.where(F.col("lbl") != F.col("plbl")).count() == 0
+
+        labels = _fixpoint(
+            scope, step,
+            scope.cut(nodes.select("id", F.col("id").alias("lbl"))),
+            rounds=max_rounds, until=unchanged, label="dedup_components")
+        sizes = labels.groupBy(F.col("lbl").alias("component")).agg(
+            F.count("*").alias("n_members"))
+        out = (
+            labels.join(sizes, labels["lbl"] == sizes["component"])
+            .select(
+                F.col("id").alias(id_col),
+                "component",
+                "n_members",
+                (F.col("id") == F.col("component")).alias("is_keep"),
+            )
         )
-        # the count materialized new's checkpoint; the PREVIOUS round's
-        # label blocks are now dead — release them deterministically
-        # instead of waiting on the ContextCleaner
-        new_ids = _checkpointed_rdd_ids(new)
-        _release_rdds(sc, prev_ids)
-        prev_ids = new_ids
-        labels = new
-        if changed == 0:
-            break
-    else:
-        _release_rdds(sc, prev_ids)
-        edges.unpersist()
-        raise ValueError(
-            f"dedup_components did not converge in {max_rounds} rounds")
-    sizes = labels.groupBy(F.col("lbl").alias("component")).agg(
-        F.count("*").alias("n_members"))
-    out = (
-        labels.join(sizes, labels["lbl"] == sizes["component"])
-        .select(
-            F.col("id").alias(id_col),
-            "component",
-            "n_members",
-            (F.col("id") == F.col("component")).alias("is_keep"),
-        )
-    )
-    if keep_col is not None:
-        # best-scoring member per component: min over struct(-score, id)
-        # is deterministic under ties (min id) and NULL scores coalesce
-        # to -inf so they lose to any scored member.  LEFT join + per-id
-        # max keep the output row set identical to the default policy:
-        # pair-only nodes (no docs row) stay — scoreless, so they can
-        # only win an all-scoreless component by min id — and duplicate
-        # docs rows collapse to the doc's best score instead of fanning
-        # the output out.
-        score = F.coalesce(
-            F.col("_kv").cast("double"), F.lit(float("-inf")))
-        m = docs.groupBy(id_col).agg(F.max(keep_col).alias("_kv"))
-        scored = (out.drop("is_keep").join(m, id_col, "left")
-                  .withColumn("_neg", -score))
-        best = scored.groupBy("component").agg(
-            F.min(F.struct(F.col("_neg"), F.col(id_col).alias("_bid"))
-                  ).alias("_b"))
-        out = (scored.join(best, "component")
-               .select(id_col, "component", "n_members",
-                       (F.col(id_col) == F.col("_b._bid")).alias("is_keep")))
-    # sever the remaining lineage before releasing the edge cache (the
-    # per-round label tables are already checkpointed).  localCheckpoint
-    # is executor-local (not fault-tolerant storage) — on a real cluster
-    # an executor loss fails the job rather than recomputing; acceptable
-    # for a deterministic batch op, and the output is one small row per
-    # doc.
-    rows = out.localCheckpoint(eager=True)
-    _release_rdds(sc, prev_ids)   # final label round, consumed by `rows`
-    edges.unpersist()
+        if keep_col is not None:
+            # best-scoring member per component: min over struct(-score,
+            # id) is deterministic under ties (min id) and NULL scores
+            # coalesce to -inf so they lose to any scored member.  LEFT
+            # join + per-id max keep the output row set identical to the
+            # default policy: pair-only nodes (no docs row) stay —
+            # scoreless, so they can only win an all-scoreless component
+            # by min id — and duplicate docs rows collapse to the doc's
+            # best score instead of fanning the output out.
+            score = F.coalesce(
+                F.col("_kv").cast("double"), F.lit(float("-inf")))
+            m = docs.groupBy(id_col).agg(F.max(keep_col).alias("_kv"))
+            scored = (out.drop("is_keep").join(m, id_col, "left")
+                      .withColumn("_neg", -score))
+            best = scored.groupBy("component").agg(
+                F.min(F.struct(F.col("_neg"), F.col(id_col).alias("_bid"))
+                      ).alias("_b"))
+            out = (scored.join(best, "component")
+                   .select(id_col, "component", "n_members",
+                           (F.col(id_col) == F.col("_b._bid"))
+                           .alias("is_keep")))
+        # localCheckpoint is executor-local (not fault-tolerant storage) —
+        # on a real cluster an executor loss fails the job rather than
+        # recomputing; acceptable for a deterministic batch op, and the
+        # output is one small row per doc.
+        rows = scope.cut(out)
+        scope.keep(rows)
     return rows
 
 

@@ -30,8 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crankshaft_spark.operators.dedup import (
-    _checkpointed_rdd_ids, _release_rdds)
+from crankshaft_spark.operators._fixpoint import _fixpoint, _Scope
 
 #: links emitted per page; targets are a keyed affine walk over the other
 #: 63 host slots, so dst != src by construction and every host with >= 1
@@ -47,6 +46,16 @@ def _contrib(div: str) -> str:
     operands here)."""
     return (f"(rank_fp {div} out_w) * w "
             f"+ ((rank_fp % out_w) * w) {div} out_w")
+
+
+def _edge_input(scope: _Scope, edges: DataFrame, bad, msg: str):
+    """(e, nodes): the call's edge-table cut, whose own job raises
+    ``msg`` on any row where ``bad`` holds (no extra action), and its
+    node set src ∪ dst."""
+    e = scope.cut(edges.withColumn(
+        "w", F.when(bad, F.raise_error(F.lit(msg))).otherwise(F.col("w"))))
+    return e, (e.select(F.col("src").alias("host"))
+               .unionByName(e.select(F.col("dst").alias("host"))).distinct())
 
 
 def host_links(pages: DataFrame, *, n_hosts: int = HOST_MOD) -> DataFrame:
@@ -106,82 +115,69 @@ def pagerank_fp(
     nonzero only at seeds, and the same integer algebra applies, so the
     personalized form keeps the bit-identical / replayable contract.
 
-    Plan shape: the edge table is localCheckpointed once (truncating
-    its source lineage, which would otherwise be re-analyzed inside
-    every round's action — measured ~0.25 s driver overhead per action
-    at the gate, r4 verdict item 1), the out-degree-annotated copy is
-    localCheckpointed once more, and each round is one rank join +
-    groupBy(dst) sum + left join back, localCheckpointed every TWO
-    rounds so the plan stays bounded across rounds (the round-3
-    plan-growth lesson) at half the per-round checkpoint-job latency.
-    Between checkpoints the plan holds <= 2 rounds over RDD-scan leaves
-    (r is referenced twice per round -> <= 4 leaf copies: constant).
-    At cluster scale rounds shuffle on (dst) only; rank and node tables
-    are one row per host.
+    Edge weights must be > 0 (a source whose weights sum to 0 divides by
+    zero; negative weights give meaningless ranks): any w <= 0 fails the
+    call with a ``pagerank_fp:`` error from the edge-table checkpoint.
+
+    Each round is one rank join + groupBy(dst) sum + left join back,
+    shuffling on (dst) only; the rank table is checkpointed every TWO
+    rounds (operators/_fixpoint.py).
     """
     if iters < 0:
         raise ValueError(f"pagerank_fp: iters must be >= 0, got {iters}")
-    e = edges.localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    )
-    out = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    ew = e.join(out, "src").localCheckpoint()
-    if seeds is None:
-        teleport = nodes
-    else:
-        teleport = nodes.join(
-            seeds.select(F.col("host")).distinct(), "host", "left_semi")
-        # loud guard instead of an ANSI DIVIDE_BY_ZERO deep in the plan
-        # (one bounded driver check — teleport sets are small by nature)
-        if teleport.limit(1).count() == 0:
-            raise ValueError(
-                "pagerank_fp: seeds do not intersect the graph's node set")
-    n1 = teleport.agg(F.count(F.lit(1)).alias("_n"))
-    consts = n1.select(
-        "_n",
-        F.expr(f"{scale_total} div _n").alias("_r0"),
-        F.expr(f"({damp_den - damp_num} * ({scale_total} div _n)) "
-               f"div {damp_den}").alias("_base"),
-    )
-    flagged = nodes.join(
-        teleport.select("host", F.lit(True).alias("_t")), "host", "left")
-    r = flagged.join(F.broadcast(consts)).select(
-        "host",
-        F.expr("CASE WHEN _t THEN _r0 ELSE CAST(0 AS BIGINT) END")
-        .alias("rank_fp"),
-        F.expr("CASE WHEN _t THEN _base ELSE CAST(0 AS BIGINT) END")
-        .alias("_base")).localCheckpoint()
-    # r0/ew are materialized -> e's blocks are no longer read; release
-    # checkpoint storage deterministically instead of waiting on GC +
-    # ContextCleaner (review finding r5 — repeated invocations in one
-    # JVM otherwise stack stale edge-table copies)
-    sc = edges.sparkSession.sparkContext
-    _release_rdds(sc, _checkpointed_rdd_ids(e))
-    prev_ids = _checkpointed_rdd_ids(r)
-    for k in range(1, iters + 1):
-        contrib = (
-            ew.join(r.select(F.col("host").alias("src"), "rank_fp"), "src")
-            .select(
-                F.col("dst").alias("host"),
-                F.expr(_contrib("div")).alias("_c"))
+    with _Scope(edges.sparkSession) as scope:
+        e, nodes = _edge_input(scope, edges, F.col("w") <= 0,
+                               "pagerank_fp: edge weights must be > 0")
+        out = e.groupBy("src").agg(F.sum("w").alias("out_w"))
+        ew = scope.cut(e.join(out, "src"))
+        if seeds is None:
+            teleport = nodes
+        else:
+            teleport = nodes.join(
+                seeds.select(F.col("host")).distinct(), "host", "left_semi")
+            # loud guard instead of an ANSI DIVIDE_BY_ZERO deep in the
+            # plan (one bounded driver check — teleport sets are small)
+            if teleport.limit(1).count() == 0:
+                raise ValueError(
+                    "pagerank_fp: seeds do not intersect the graph's "
+                    "node set")
+        n1 = teleport.agg(F.count(F.lit(1)).alias("_n"))
+        consts = n1.select(
+            "_n",
+            F.expr(f"{scale_total} div _n").alias("_r0"),
+            F.expr(f"({damp_den - damp_num} * ({scale_total} div _n)) "
+                   f"div {damp_den}").alias("_base"),
         )
-        sums = contrib.groupBy("host").agg(F.sum("_c").alias("_s"))
-        r = (
-            r.select("host", "_base").join(sums, "host", "left")
-            .select(
-                "host",
-                F.expr(f"_base + ({damp_num} * coalesce(_s, 0)) "
-                       f"div {damp_den}").alias("rank_fp"),
-                "_base")
-        )
-        if k % 2 == 0 or k == iters:
-            r = r.localCheckpoint()
-            _release_rdds(sc, prev_ids)
-            prev_ids = _checkpointed_rdd_ids(r)
-    _release_rdds(sc, _checkpointed_rdd_ids(ew))
+        flagged = nodes.join(
+            teleport.select("host", F.lit(True).alias("_t")), "host", "left")
+        r = scope.cut(flagged.join(F.broadcast(consts)).select(
+            "host",
+            F.expr("CASE WHEN _t THEN _r0 ELSE CAST(0 AS BIGINT) END")
+            .alias("rank_fp"),
+            F.expr("CASE WHEN _t THEN _base ELSE CAST(0 AS BIGINT) END")
+            .alias("_base")))
+        scope.release(e)  # r0 and ew are materialized: e is dead
+
+        def step(r: DataFrame, _k: int) -> DataFrame:
+            contrib = (
+                ew.join(r.select(F.col("host").alias("src"), "rank_fp"),
+                        "src")
+                .select(
+                    F.col("dst").alias("host"),
+                    F.expr(_contrib("div")).alias("_c"))
+            )
+            sums = contrib.groupBy("host").agg(F.sum("_c").alias("_s"))
+            return (
+                r.select("host", "_base").join(sums, "host", "left")
+                .select(
+                    "host",
+                    F.expr(f"_base + ({damp_num} * coalesce(_s, 0)) "
+                           f"div {damp_den}").alias("rank_fp"),
+                    "_base")
+            )
+
+        r = _fixpoint(scope, step, r, rounds=iters, every=2)
+        scope.keep(r)
     return r.select("host", "rank_fp")
 
 
@@ -269,35 +265,20 @@ def hits_fp(
     graphs).  For heavier graphs lower ``scale`` (domain widens as
     2⁶³/scale²) or pre-aggregate edge weights.
 
-    Plan shape per round (r5 rewrite — r4 verdict item 1: the gate graph
-    is one row per host, so per-round driver latency, not work,
-    dominated; measured ~0.25 s of Catalyst/Py4J overhead per ACTION
-    regardless of data size).  The loop therefore runs ONE action per
-    round: the pre-norm hub aggregate is localCheckpointed (truncating
-    lineage so every round's plan is constant-size with RDD-scan
-    leaves), and both max-normalizations stay LAZY broadcast one-row
-    CASE joins folded into the next round's plan — identical subplans
-    dedupe via exchange reuse at execution.  The edge table itself is
-    localCheckpointed once up front: its source lineage (the synthetic
-    page derivation at the gate; a join pipeline in production) would
-    otherwise be re-analyzed inside every round's action.  The
+    Edge weights must be >= 0 (a negative max breaks the normalization):
+    any w < 0 fails the call with a ``hits_fp:`` error from the
+    edge-table checkpoint.
+
+    Each round is ONE action: the pre-norm hub aggregate is checkpointed
+    (operators/_fixpoint.py) and both max-normalizations stay LAZY
+    broadcast one-row CASE joins folded into the next round's plan.  The
     zero-fill join against the node table runs ONCE after the loop —
-    hosts absent from a round's aggregate carry value 0, contribute 0
-    to the next round's sums, and leave the max unchanged, so deferring
-    the fill is value-identical.  Shuffle O(edges) per round.
+    hosts absent from a round's aggregate carry value 0, contribute 0 to
+    the next round's sums, and leave the max unchanged, so deferring the
+    fill is value-identical.  Shuffle O(edges) per round.
     """
     if iters < 0:
         raise ValueError(f"hits_fp: iters must be >= 0, got {iters}")
-    e = edges.localCheckpoint()
-    # nodes checkpointed (one extra one-row-per-host action) so e's
-    # blocks can be released at loop end instead of surviving until the
-    # caller materializes the output fill join (review finding r5)
-    nodes = (
-        e.select(F.col("src").alias("host"))
-        .unionByName(e.select(F.col("dst").alias("host")))
-        .distinct()
-    ).localCheckpoint()
-    sc = edges.sparkSession.sparkContext
 
     def norm(raw: DataFrame, col: str) -> DataFrame:
         """Lazy max-normalization: one-row broadcast + CASE (no action)."""
@@ -307,45 +288,40 @@ def hits_fp(
             F.expr(f"CASE WHEN _mx > 0 THEN ({col} * {scale}) div _mx "
                    f"ELSE {col} END").alias(col))
 
-    if iters == 0:
-        # nodes is materialized; e's blocks are already unreferenced
-        _release_rdds(sc, _checkpointed_rdd_ids(e))
-        return nodes.select(
-            "host", F.lit(scale).cast("long").alias("auth_fp"),
-            F.lit(scale).cast("long").alias("hub_fp"))
+    with _Scope(edges.sparkSession) as scope:
+        e, nodes = _edge_input(scope, edges, F.col("w") < 0,
+                               "hits_fp: edge weights must be >= 0")
+        # nodes checkpointed so e's blocks are released at loop end
+        # instead of surviving until the caller materializes the output
+        # fill join; round 0 starts every node at `scale`
+        nodes = scope.cut(nodes)
+        a = nodes.select("host", F.lit(scale).cast("long").alias("auth_fp"))
 
-    # round 0: every node starts at `scale`; only hub feeds round 1, and
-    # only through the src-keyed join, so seeding src hosts suffices.
-    h_raw = e.select(F.col("src").alias("host")).distinct().select(
-        "host", F.lit(scale).cast("long").alias("hub_fp")).localCheckpoint()
-    prev_ids = _checkpointed_rdd_ids(h_raw)
-    a = None
-    for k in range(1, iters + 1):
-        a = norm(
-            e.join(norm(h_raw, "hub_fp")
-                   .select(F.col("host").alias("src"), "hub_fp"), "src")
-            .groupBy(F.col("dst").alias("host"))
-            .agg(F.sum(F.expr("hub_fp * w")).alias("auth_fp")), "auth_fp")
-        if k == iters:
-            # final a feeds both the last hub aggregate and the output
-            # join — materialize it so the round runs exactly once
-            a = a.localCheckpoint()
-        h_raw = (
-            e.join(a.select(F.col("host").alias("dst"), "auth_fp"), "dst")
-            .groupBy(F.col("src").alias("host"))
-            .agg(F.sum(F.expr("auth_fp * w")).alias("hub_fp"))
-        ).localCheckpoint()
-        # h_raw(k) materialized -> h_raw(k-1) is no longer read (the
-        # final a above was checkpointed BEFORE this, so its read of
-        # h_raw(iters-1) already happened)
-        _release_rdds(sc, prev_ids)
-        prev_ids = _checkpointed_rdd_ids(h_raw)
-    _release_rdds(sc, _checkpointed_rdd_ids(e))
-    return (
-        nodes.join(a, "host", "left")
-        .join(norm(h_raw, "hub_fp"), "host", "left")
-        .na.fill({"auth_fp": 0, "hub_fp": 0})
-        .select("host", "auth_fp", "hub_fp"))
+        def step(h_raw: DataFrame, k: int) -> DataFrame:
+            nonlocal a
+            a = norm(
+                e.join(norm(h_raw, "hub_fp")
+                       .select(F.col("host").alias("src"), "hub_fp"), "src")
+                .groupBy(F.col("dst").alias("host"))
+                .agg(F.sum(F.expr("hub_fp * w")).alias("auth_fp")),
+                "auth_fp")
+            if k == iters:
+                # final a feeds both the last hub aggregate and the output
+                # join — materialize it so the round runs exactly once
+                a = scope.cut(a)
+            return (
+                e.join(a.select(F.col("host").alias("dst"), "auth_fp"), "dst")
+                .groupBy(F.col("src").alias("host"))
+                .agg(F.sum(F.expr("auth_fp * w")).alias("hub_fp")))
+
+        h_raw = _fixpoint(scope, step, nodes.select(
+            "host", F.lit(scale).cast("long").alias("hub_fp")), rounds=iters)
+        scope.keep(nodes, a, h_raw)
+        return (
+            nodes.join(a, "host", "left")
+            .join(norm(h_raw, "hub_fp"), "host", "left")
+            .na.fill({"auth_fp": 0, "hub_fp": 0})
+            .select("host", "auth_fp", "hub_fp"))
 
 
 def hits_oracle_sql(

@@ -867,65 +867,43 @@ def q_page_extract(spark, sf_dir):
     oracle covers both arms — any framing/compression/parse defect breaks
     the value hash.
     """
-    from crankshaft_spark.operators.graph import host_links, pagerank_fp
-    from crankshaft_spark.sources.warc import warc_roundtrip_pages
-    from crankshaft_spark.sources.webpages import extract_text, synth_webpages
-
-    pages = synth_webpages(spark, sf_dir)
-    html_arm = extract_text(pages).select(
-        "page_id", "url", F.col("extracted_text").alias("text"),
-        F.lit("html").alias("src"),
-    )
-    warc_arm = extract_text(
-        warc_roundtrip_pages(spark, sf_dir).filter("ok")
-    ).select(
-        "page_id", "url", F.col("extracted_text").alias("text"),
-        F.lit("warc").alias("src"),
-    )
-    # late r4: host-graph link-analysis arms — PageRank and HITS over the
-    # closed-form host link graph; ranks are BIGINT fixed point, so the
-    # string projections are integer-exact (page_id carries the host id)
     from concurrent.futures import ThreadPoolExecutor
 
-    from crankshaft_spark.operators.graph import HOST_MOD, hits_fp
+    from crankshaft_spark.operators._fixpoint import (
+        _checkpointed_rdd_ids, _release_rdds)
 
-    # checkpointed once: three arms (pagerank, ppr, hits) reuse the
-    # O(pages) link aggregate as an RDD-scan leaf (each op's own input
-    # checkpoint then re-reads blocks, not the synth derivation).  The
-    # arms' iterative loops are driver-latency-bound at gate scale
-    # (~0.25 s Catalyst/Py4J per action — r4 verdict item 1), so their
-    # construction runs on three threads: Spark job submission is
-    # thread-safe, the arms share no mutable state, and the integer
-    # algebra keeps results bit-identical regardless of interleaving.
-    links = host_links(pages).localCheckpoint()
-    seeds = spark.range(HOST_MOD).select(
-        F.col("id").alias("host")).where("host % 7 = 0")
-    with ThreadPoolExecutor(3) as pool:
-        f_pr = pool.submit(pagerank_fp, links, iters=PAGERANK_ITERS)
-        f_ht = pool.submit(hits_fp, links, iters=HITS_ITERS)
-        f_ppr = pool.submit(
-            lambda: pagerank_fp(links, iters=PPR_ITERS, seeds=seeds))
-    pr = f_pr.result().select(
-        F.col("host").alias("page_id"),
-        F.concat(F.lit("host"), F.col("host").cast("string")).alias("url"),
-        F.col("rank_fp").cast("string").alias("text"),
-        F.lit("pagerank").alias("src"),
-    )
-    ht = f_ht.result().select(
-        F.col("host").alias("page_id"),
-        F.concat(F.lit("host"), F.col("host").cast("string")).alias("url"),
-        F.concat(F.col("auth_fp").cast("string"), F.lit(":"),
-                 F.col("hub_fp").cast("string")).alias("text"),
-        F.lit("hits").alias("src"),
-    )
-    ppr = f_ppr.result().select(
-        F.col("host").alias("page_id"),
-        F.concat(F.lit("host"), F.col("host").cast("string")).alias("url"),
-        F.col("rank_fp").cast("string").alias("text"),
-        F.lit("ppr").alias("src"),
-    )
-    return (html_arm.unionByName(warc_arm).unionByName(pr)
-            .unionByName(ht).unionByName(ppr))
+    # host-graph arms (BIGINT ranks: integer-exact string projections;
+    # page_id carries the host id).  Their loops are driver-latency-bound
+    # (~0.25 s per action), so they build on three threads: job submission
+    # is thread-safe and the integer algebra is interleaving-proof.  Each
+    # output reads only its own checkpoints, so `links` is then released.
+    arms, links = page_extract_arm_builders(spark, sf_dir)
+    try:
+        with ThreadPoolExecutor(3) as pool:
+            futs = {v: pool.submit(arms[v])
+                    for v in ("pagerank", "hits", "ppr")}
+        graph = {v: f.result() for v, f in futs.items()}
+    finally:
+        _release_rdds(spark.sparkContext, _checkpointed_rdd_ids(links))
+
+    def page_arm(v):
+        return arms[v]().select("page_id", "url",
+                                F.col("extracted_text").alias("text"),
+                                F.lit(v).alias("src"))
+
+    def host_arm(v, text):
+        return graph[v].select(
+            F.col("host").alias("page_id"),
+            F.concat(F.lit("host"), F.col("host").cast("string")).alias("url"),
+            text.alias("text"), F.lit(v).alias("src"))
+
+    rank = F.col("rank_fp").cast("string")
+    return (page_arm("html").unionByName(page_arm("warc"))
+            .unionByName(host_arm("pagerank", rank))
+            .unionByName(host_arm("hits", F.concat(
+                F.col("auth_fp").cast("string"), F.lit(":"),
+                F.col("hub_fp").cast("string"))))
+            .unionByName(host_arm("ppr", rank)))
 
 
 PAGERANK_ITERS = 5
@@ -938,11 +916,12 @@ PPR_ITERS = 5
 
 
 def page_extract_arm_builders(spark, sf_dir):
-    """Per-arm builders for bench attribution (r4 verdict item 5): the
-    entry's graph arms run EAGERLY at query construction (checkpointed
-    driver loops), so bench.py's column-filter arm timing cannot isolate
-    them — these builders re-create each arm alone, sharing one untimed
-    link-table checkpoint the way the entry does."""
+    """(builders, links) — one builder per page_extract arm, which the
+    entry composes and bench.py times one by one (r4 verdict item 5: the
+    graph arms run EAGERLY at query construction, so column-filter arm
+    timing cannot isolate them).  The graph arms share ``links``, the
+    link-table checkpoint; the caller releases it
+    (``_fixpoint._release_rdds``) after the last graph arm has run."""
     from crankshaft_spark.operators.graph import (
         HOST_MOD, hits_fp, host_links, pagerank_fp)
     from crankshaft_spark.sources.warc import warc_roundtrip_pages
@@ -961,7 +940,7 @@ def page_extract_arm_builders(spark, sf_dir):
         "pagerank": lambda: pagerank_fp(links, iters=PAGERANK_ITERS),
         "hits": lambda: hits_fp(links, iters=HITS_ITERS),
         "ppr": lambda: pagerank_fp(links, iters=PPR_ITERS, seeds=seeds),
-    }
+    }, links
 
 
 def o_page_extract():

@@ -405,15 +405,18 @@ def test_dedup_components_on_lsh_pairs(spark, docs):
 def test_dedup_components_deep_chain_and_backstop(spark):
     """Deep chains converge without tuning (pointer jumping: O(log d)
     rounds); the max_rounds backstop fails loudly instead of returning
-    split groups."""
+    split groups, and releases every checkpoint the call made."""
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "a long, b long")
     got = dedup_components(docs, pairs).collect()
     assert all(r["component"] == 0 for r in got)
     assert sum(r["is_keep"] for r in got) == 1
+    held = spark.sparkContext._jsc.getPersistentRDDs().keySet
+    before = set(held())
     with pytest.raises(ValueError, match="did not converge"):
         dedup_components(docs, pairs, max_rounds=1)
+    assert set(held()) <= before
 
 
 def test_image_ahash_replay_and_pairs(spark):

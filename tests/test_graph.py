@@ -1,8 +1,11 @@
 """Host-graph PageRank: Python fixed-point replay, dangling-mass policy,
-parallelism invariance, and the host_links no-dangling guarantee."""
+parallelism invariance, and the host_links no-dangling guarantee; the
+loop operators' checkpoint release over a long session and on error."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from crankshaft_spark.operators.graph import (
@@ -163,3 +166,77 @@ def test_pagerank_default_unchanged_by_seeds_param(spark):
     b = {r["host"]: r["rank_fp"]
          for r in pagerank_fp(df, iters=3, seeds=all_seeds).collect()}
     assert a == b  # seeding with ALL nodes is the classic form
+
+
+def _persistent(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _jobs_started(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _leaf_rdd_ids(df):
+    """Ids of the checkpoint RDDs the DataFrame's plan reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).rdd().id() for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRDD"}
+
+
+def test_loop_operators_soak(spark):
+    """Five calls of each loop operator in one session: every call leaves
+    exactly its output's own checkpoints persisted (released here before
+    the next call), and the job count per call stays flat.  AQE submits
+    query stages as jobs of their own, how many depends on stage timing,
+    so dedup_components' count moves within a band of 3 on unchanged
+    code (49-52 over calls); growth beyond that band fails."""
+    from crankshaft_spark.operators._fixpoint import _release_rdds
+    from crankshaft_spark.operators.dedup import dedup_components
+    from crankshaft_spark.operators.graph import hits_fp
+
+    edges = spark.createDataFrame(EDGES, "src long, dst long, w long")
+    docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 39) if i % 10 != 9], "a long, b long")
+    calls = {
+        "dedup_components": (lambda: dedup_components(docs, pairs), 1),
+        "pagerank_fp": (lambda: pagerank_fp(edges, iters=3), 1),
+        "hits_fp": (lambda: hits_fp(edges, iters=3), 3),
+    }
+    for name, (call, n_held) in calls.items():
+        jobs = []
+        for _ in range(5):
+            before, j0 = _persistent(spark), _jobs_started(spark)
+            out = call()
+            assert out.collect()
+            jobs.append(_jobs_started(spark) - j0)
+            held = _persistent(spark) - before
+            assert held == _leaf_rdd_ids(out) and len(held) == n_held, name
+            _release_rdds(spark.sparkContext, held)
+        assert abs(jobs[-1] - jobs[1]) <= 3, (name, jobs)
+
+
+def test_pagerank_seed_guard_leaves_no_checkpoint(spark):
+    edges = spark.createDataFrame(EDGES, "src long, dst long, w long")
+    before = _persistent(spark)
+    with pytest.raises(ValueError, match="seeds do not intersect"):
+        pagerank_fp(edges, iters=3,
+                    seeds=spark.createDataFrame([(99,)], "host long"))
+    assert _persistent(spark) <= before
+
+
+@pytest.mark.parametrize("op, bad_w", [
+    ("pagerank_fp", 0), ("pagerank_fp", -2), ("hits_fp", -1),
+])
+def test_loop_operators_reject_bad_weights(spark, op, bad_w):
+    """pagerank_fp needs w > 0 (source 6's weights would sum to 0 and
+    divide by zero), hits_fp needs w >= 0; the error names the operator
+    and the failed edge-table checkpoint is released."""
+    from crankshaft_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        EDGES + [(6, 4, bad_w)], "src long, dst long, w long")
+    before = _persistent(spark)
+    with pytest.raises(SparkRuntimeException, match=f"{op}: edge weights"):
+        getattr(graph, op)(edges, iters=2)
+    assert _persistent(spark) <= before
