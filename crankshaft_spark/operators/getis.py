@@ -255,9 +255,12 @@ m with <= 10 distinct prime factors (m < 2^31 has <= 9); for m-1 < 64 the
 wrapped window covers all of 1..m-1, which contains 1."""
 
 
-def _crand_rank_sums(ha, hb, degs, excl, yv, slots, max_elems=1 << 24):
+def _crand_rank_sums(ha, hb, degs, excl, yv, slots, wts=None,
+                     max_elems=1 << 24):
     """Conditional-randomization draw sums for a whole Arrow batch →
-    (n_rows × permutations) matrix of Σ yv over each drawn subset.
+    (n_rows × permutations) matrix of Σ yv over each drawn subset, or of
+    Σ_k wts[i, k]·yv[draw_k] when per-row weights ``wts`` (n_rows × ≥ deg,
+    the k-th weight applied to the k-th drawn rank slot) are given.
 
     Row i's pool ordering is a keyed AFFINE bijection of pool positions:
     rank r holds position π_i(r) = (c_i + a_i·r) mod m, where a_i is the
@@ -309,11 +312,14 @@ def _crand_rank_sums(ha, hb, degs, excl, yv, slots, max_elems=1 << 24):
     hb = np.asarray(hb, dtype=np.int64)
     n_rows, m = len(ha), len(yv)
     perms = slots.shape[0]
-    out = np.zeros((n_rows, perms), dtype=yv.dtype)
+    out = np.zeros((n_rows, perms),
+                   dtype=yv.dtype if wts is None else float)
     if n_rows == 0 or perms == 0 or m < 2:
         return out  # m < 2 ⇒ every deg ≤ m−1 = 0 (callers enforce)
     degs = np.asarray(degs, dtype=np.int64)
     excl = np.asarray(excl, dtype=np.int64)
+    if wts is not None:
+        wts = np.asarray(wts, dtype=float)
     maxd = int(degs.max()) if n_rows else 0
     c = np.where(excl >= 0, excl, hb % m)
     chunk = max(1, max_elems // max(_A_TRIES, perms * max(maxd, 1)))
@@ -339,8 +345,115 @@ def _crand_rank_sums(ha, hb, degs, excl, yv, slots, max_elems=1 << 24):
             # per-row state
             idx = (cc[rows, None, None]
                    + a[rows, None, None] * slots[None, :, :d]) % m
-            out[s0 + rows] = yv[idx].sum(axis=2)
+            drawn = yv[idx]
+            if wts is not None:
+                drawn = drawn * wts[s0 + rows, None, :d]
+            out[s0 + rows] = drawn.sum(axis=2)
     return out
+
+
+def _crand_sim(values, edges, value_col, *, op, tag, seed, permutations,
+               pool_size, stat, schema, cast="double", weights=False,
+               rows=None, persist=True, persist_registry=None):
+    """The Spark side of a keyed-affine crand sim — ONE copy for every sim
+    operator → the lazy per-row ``stat`` frame of ``schema``.
+
+    Input contract: NULL values are dropped (a None in the broadcast pool
+    would turn every draw sum to NaN), and edge sources without a value
+    are ignored, by the max-degree check too.  ``nbr_stats`` holds, per
+    source, ``_deg`` and ``_nbrsum`` over its valued neighbours and, with
+    ``weights``, ``_ws`` — its edge weights in nbr order (sample values
+    are exchangeable, so any fixed order is a valid and parallelism-stable
+    pairing).  It feeds TWO actions — the max-degree aggregate and the sim
+    stage — so it is persisted unless ``persist=False``, handles appended
+    to ``persist_registry`` (else the edge join + groupBy, the biggest
+    shuffle, runs twice).  Both actions read it joined to the valued rows,
+    which adds each row's own value ``_y`` (cast to ``cast``, the pool's
+    type); the sim stage also gets the draw hashes ``_ha``/``_hb``
+    (``_h32_col``, tags ``{tag}-A``/``{tag}-B``).
+
+    Driver state is O(pool + perms·maxdeg): the ``{tag}-pool`` hash pool
+    (``_hash_pool``; an empty pool is the named no-rows error, raised from
+    the collect the sim needs anyway) and the ``_sim_slots`` templates
+    truncated at the max degree — draws never read past a row's degree,
+    so the prefix is value-invariant and the broadcast is ≈99×5 at kNN
+    defaults, not 99×64k.  Requires deg ≤ pool−1 (the template's slot
+    count).
+
+    The Python stage runs under ``spread_groups`` (tiny bytes, heavy
+    per-row numpy: unpinned, AQE coalesces it onto one task) and yields
+    ``stat(pdf, sums)`` per Arrow batch: ``sums`` is the batch's
+    (rows × permutations) ``_crand_rank_sums`` matrix, ``pdf`` carries
+    the columns above, the columns of ``rows`` (joined on id) and the
+    global ``_n``/``_ysum`` — a broadcast aggregate, joined after the
+    repartition so it adds no shuffle bytes, that also raises the named
+    zero-variance error (no extra action)."""
+    from crankshaft_spark.functions.spread import spread_groups
+
+    values = values.where(F.col(value_col).isNotNull())
+    y = values.select("id", F.col(value_col).cast(cast).alias("_y"))
+    aggs = [F.count("*").alias("_deg"), F.sum("_y").alias("_nbrsum")]
+    if weights:
+        aggs.append(F.transform(
+            F.sort_array(F.collect_list(F.struct("nbr", "w"))),
+            lambda st: st["w"]).alias("_ws"))
+    nbr_stats = (
+        edges.select("id", "nbr", *(["w"] if weights else []))
+        .join(y.withColumnRenamed("id", "nbr"), "nbr")
+        .groupBy("id").agg(*aggs)
+    )
+    if persist:
+        nbr_stats = nbr_stats.persist()
+        if persist_registry is not None:
+            persist_registry.append(nbr_stats)
+    sim_in = y.join(nbr_stats, "id")  # valued sources only
+    ids, yl = _hash_pool(values, value_col, f"{tag}-pool", pool_size, cast)
+    m = len(ids)  # pool size (== n when pool_size is None or n <= pool)
+    if not m:
+        raise ValueError(f"{op}: no rows with a non-null value")
+    maxd = int(sim_in.agg(F.max("_deg")).first()[0] or 0)
+    if maxd > m - 1:
+        raise ValueError(
+            f"{op}: max deg {maxd} exceeds the {m - 1} pool template "
+            f"slots — raise pool_size (got {m})")
+    sc = values.sparkSession.sparkContext
+    by = sc.broadcast(np.array(yl, dtype=np.int64 if cast == "long"
+                               else float))
+    bpos = sc.broadcast({v: i for i, v in enumerate(ids)})
+    bslots = sc.broadcast(_sim_slots(tag, seed, permutations, m)[:, :maxd])
+
+    def run(pdfs):
+        yv, pos, slots = by.value, bpos.value, bslots.value
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            degs = pdf["_deg"].to_numpy(dtype=np.int64)
+            k = int(degs.argmax())
+            if degs[k] > slots.shape[1]:  # input changed since the maxd job
+                raise ValueError(
+                    f"{op}: deg({pdf['id'].iat[k]})={degs[k]} exceeds the "
+                    f"{slots.shape[1]} template slots shipped")
+            wts = None
+            if weights:
+                wts = np.zeros((len(pdf), slots.shape[1]))
+                for i, ws in enumerate(pdf["_ws"]):
+                    wts[i, :len(ws)] = ws
+            excl = [pos.get(int(r), -1) for r in pdf["id"]]  # may be off-pool
+            yield stat(pdf, _crand_rank_sums(pdf["_ha"], pdf["_hb"], degs,
+                                             excl, yv, slots, wts=wts))
+
+    tot = y.agg(
+        F.count("*").alias("_n"),
+        F.when(F.min("_y") == F.max("_y"), F.raise_error(F.lit(
+            f"{op}: zero variance (all values equal)")))
+        .otherwise(F.sum("_y")).alias("_ysum"),
+    )
+    sim_in = sim_in.select("*", _h32_col(f"{tag}-A", seed).alias("_ha"),
+                           _h32_col(f"{tag}-B", seed).alias("_hb"))
+    if rows is not None:
+        sim_in = sim_in.join(rows, "id")
+    return (spread_groups(sim_in, "id").join(F.broadcast(tot))
+            .mapInPandas(run, schema))
 
 
 def getis_gstar_sim(
@@ -358,10 +471,11 @@ def getis_gstar_sim(
 
     The per-row permutation table is persisted by default (it feeds both
     the pooled moments and the final join — without the cache the
-    O(n·permutations) mapInPandas stage executes twice per action).  The
-    pinned table is bounded (n rows × 7 columns) but lives until the
-    session clears it: repeated calls in one session should collect the
-    handle via ``persist_registry`` and unpersist it, clear with
+    O(n·permutations) mapInPandas stage executes twice per action), as is
+    the neighbour table both sim actions read (``_crand_sim``).  The
+    pinned tables are bounded (n rows × ≤ 9 columns) but live until the
+    session clears them: repeated calls in one session should collect the
+    handles via ``persist_registry`` and unpersist them, clear with
     ``spark.catalog.clearCache()``, or pass ``persist=False`` (the
     contour_cells convention).
 
@@ -378,8 +492,8 @@ def getis_gstar_sim(
     expressible verbatim in the DuckDB oracle (no numpy RNG stream).
     Statistics mirror PySAL G_Local: two-sided folded p_sim,
     pooled-moment z_sim (EG/seG over all rows × permutations).  Per-row
-    work is vectorized numpy over an Arrow batch; everything after is
-    column algebra.
+    work is vectorized numpy over an Arrow batch (``_crand_sim``, tag
+    ``gsim``); everything after is column algebra.
 
     Cost bound: the candidate pool is capped at ``pool_size`` (default
     ``SIM_POOL_DEFAULT``) by a hash-ranked uniform subsample (see
@@ -392,120 +506,43 @@ def getis_gstar_sim(
     crawl scale prefer the analytic ``getis_gstar`` (pure column algebra)
     — p_sim resolution is bounded by 1/(permutations+1), not n — but with
     a small pool (1024) this path runs at 10M+ rows (scalebench sim row).
+    Empty / all-NULL input and zero variance raise errors naming the
+    operator.
 
     The s ≥ nbrsum comparison is pinned at 6dp on both sides: nbrsum is a
     Spark float sum whose partial-aggregation order varies with
     parallelism (CLAUDE.md float-pin rule).  Exact no-op for the
     integer-valued y the oracle contract requires.
     """
-    import numpy as np
     import pandas as pd
 
-    # tolerate the same inputs the analytic path does: drop NULL values
-    # (a None reaching np.array turns the broadcast pool to NaN and
-    # poisons every permutation sum) — mirrors moran_local_hash_sim.
-    # Edge sources/targets outside `values` need no extra guard: nbr_stats
-    # inner-joins edges.nbr to values and the per-row base inner-joins
-    # values to nbr_stats, so neither side can reach run().
-    values = values.where(F.col(value_col).isNotNull())
+    def stat(pdf, s):
+        nbrsum = pdf["_nbrsum"].to_numpy(dtype=float)
+        # threshold keeps the scalar loop's Python round() (banker's
+        # correctly-rounded decimal), sims keep np.round — the exact
+        # pair the oracle parity was validated against
+        thr = np.array([round(float(v), 6) for v in nbrsum])
+        sv = s + pdf["_y"].to_numpy(dtype=float)[:, None]
+        return pd.DataFrame({
+            "id": pdf["id"], "_y": pdf["_y"], "_deg": pdf["_deg"],
+            "_nbrsum": nbrsum, "_n": pdf["_n"], "_ysum": pdf["_ysum"],
+            "_larger": (np.round(s, 6) >= thr[:, None]).sum(axis=1),
+            "_ssum": sv.sum(axis=1), "_s2sum": (sv * sv).sum(axis=1)})
 
-    spark = values.sparkSession
-    nbr_stats = (
-        edges.select("id", "nbr")
-        .join(values.select(F.col("id").alias("nbr"),
-                            F.col(value_col).alias("_y")), "nbr")
-        .groupBy("id")
-        .agg(F.count("*").alias("_deg"), F.sum("_y").alias("_nbrsum"))
-    )
-    # nbr_stats feeds TWO actions — the maxd template-truncation aggregate
-    # below and the sim input join — so pin it or the edge join+groupBy
-    # (the entry's biggest shuffle) executes twice (profiled 24% of task
-    # time at 10M rows).  n rows × 3 cols, MEMORY_AND_DISK by default.
-    if persist:
-        nbr_stats = nbr_stats.persist()
-        if persist_registry is not None:
-            persist_registry.append(nbr_stats)
-    ids, yl = _hash_pool(values, value_col, "gsim-pool", pool_size)
-    y = np.array(yl, dtype=float)
-    m = len(y)  # pool size (== n when pool_size is None or n <= pool_size)
-    # max degree bounds the template: only the first deg rank slots of
-    # each permutation are ever drawn, so the broadcast is O(perms·maxdeg)
-    # (≈99×5 at kNN defaults), not O(perms·pool) (99×64k ≈ 52 MB at the
-    # defaults, ~n·perms·8 bytes with pool_size=None).  One tiny extra
-    # aggregate job over nbr_stats; truncation is value-invariant
-    # (slots[:, :d] is a prefix, unchanged for every d ≤ maxd).
-    maxd = int(nbr_stats.agg(F.max("_deg")).first()[0] or 0)
-    if maxd > m - 1:
-        raise ValueError(
-            f"getis_gstar_sim: max deg {maxd} exceeds the {m - 1} pool "
-            f"template slots — raise pool_size (got {m})")
-    by = spark.sparkContext.broadcast(y)
-    bpos = spark.sparkContext.broadcast({v: i for i, v in enumerate(ids)})
-    bslots = spark.sparkContext.broadcast(
-        _sim_slots("gsim", seed, permutations, m)[:, :maxd])
-
-    schema = ("id long, _y double, _deg long, _nbrsum double, "
-              "_larger long, _ssum double, _s2sum double")
-
-    def run(pdfs):
-        yv, pos, slots = by.value, bpos.value, bslots.value
-        cols = ["id", "_y", "_deg", "_nbrsum", "_larger", "_ssum", "_s2sum"]
-        for pdf in pdfs:
-            if not len(pdf):
-                yield pd.DataFrame([], columns=cols)
-                continue
-            rids = [int(v) for v in pdf["id"]]
-            degs = [int(v) for v in pdf["_deg"]]
-            excl = [pos.get(r, -1) for r in rids]  # self may be off-pool
-            for rid, d in zip(rids, degs):
-                if d > m - 1:
-                    raise ValueError(
-                        f"getis_gstar_sim: deg({rid})={d} exceeds the "
-                        f"{m - 1} pool template slots — raise "
-                        f"pool_size (got {m})")
-            s = _crand_rank_sums(pdf["_ha"], pdf["_hb"], degs, excl, yv,
-                                 slots)
-            yi = pdf["_y"].to_numpy(dtype=float)
-            nbrsum = pdf["_nbrsum"].to_numpy(dtype=float)
-            # threshold keeps the scalar loop's Python round() (banker's
-            # correctly-rounded decimal), sims keep np.round — the exact
-            # pair the oracle parity was validated against
-            thr = np.array([round(float(v), 6) for v in nbrsum])
-            larger = (np.round(s, 6) >= thr[:, None]).sum(axis=1)
-            sv = s + yi[:, None]
-            yield pd.DataFrame({
-                "id": rids, "_y": yi, "_deg": degs, "_nbrsum": nbrsum,
-                "_larger": larger.astype(np.int64),
-                "_ssum": sv.sum(axis=1),
-                "_s2sum": (sv * sv).sum(axis=1)})
-
-    # spread_groups: tiny-bytes input, O(permutations·n) per-row numpy —
-    # without the pin AQE coalesces the whole permutation stage to one task
-    # (same trap as the moran sim paths / overlap refine)
-    from crankshaft_spark.functions.spread import spread_groups
-
-    base = spread_groups(
-        values.select("id", F.col(value_col).cast("double").alias("_y"))
-        .join(nbr_stats, "id")
-        .select("id", "_y", "_deg", "_nbrsum",
-                _h32_col("gsim-A", seed).alias("_ha"),
-                _h32_col("gsim-B", seed).alias("_hb")),
-        "id",
-    )
-    # per feeds BOTH the pooled moments and the final join — without the
-    # persist the O(n·permutations)-per-row mapInPandas stage executes
-    # twice per action (n bounded rows cached, 7 columns)
-    per = base.mapInPandas(run, schema=schema)
+    per = _crand_sim(
+        values, edges, value_col, op="getis_gstar_sim", tag="gsim",
+        seed=seed, permutations=permutations, pool_size=pool_size,
+        stat=stat, persist=persist, persist_registry=persist_registry,
+        schema=("id long, _y double, _deg long, _nbrsum double, _n long, "
+                "_ysum double, _larger long, _ssum double, _s2sum double"))
+    # per feeds BOTH the pooled moments and the final join
     if persist:
         per = per.persist()
         if persist_registry is not None:
             persist_registry.append(per)
-    tot = values.agg(F.sum(F.col(value_col).cast("double")).alias("_ysum"),
-                     F.count("*").alias("_n"))
     denom = (F.col("_deg") + 1) * F.col("_ysum")
     pool = (
-        per.join(F.broadcast(tot))
-        .agg(
+        per.agg(
             F.sum(F.col("_ssum") / denom).alias("_egs"),
             F.sum(F.col("_s2sum") / (denom * denom)).alias("_e2s"),
             (F.max("_n") * permutations).alias("_np"),
@@ -518,7 +555,7 @@ def getis_gstar_sim(
     gs = (F.col("_nbrsum") + F.col("_y")) / denom
     folded = F.least(F.col("_larger"), F.lit(permutations) - F.col("_larger"))
     return (
-        per.join(F.broadcast(tot)).join(F.broadcast(pool))
+        per.join(F.broadcast(pool))
         .select(
             "id",
             gs.alias("gs"),

@@ -15,10 +15,18 @@ Reference entry points: CDB_MoransILocal / CDB_AreasOfInterestGlobal /
 CDB_MoransILocalRate (/root/reference/src/pg/sql/10_moran.sql) backed by
 moran.py:33-274.  The reference collects the whole table into one PostgreSQL
 backend; here everything is join/aggregate algebra except the optional
-conditional-randomization p-values, which are a vectorized Arrow UDF over a
-broadcast value POOL bounded at ``pool_size`` (hash-ranked uniform
-subsample, getis._hash_pool) — driver state is O(pool) at any n, and the
-null is exact conditional randomization whenever n ≤ pool.
+conditional-randomization p-values.  Both permutation paths
+(``moran_local(permutations=k)`` and ``moran_local_hash_sim``) draw
+through getis._crand_sim with the ``msim`` tags: a keyed affine
+bijection of a hash-shuffled value POOL bounded at ``pool_size``
+(hash-ranked uniform subsample, getis._hash_pool) per row, walked by
+shared per-permutation rank templates — per-row cost O(perms·deg), no
+RNG stream and no per-row sort, so the draw is identical at any
+parallelism and the DuckDB oracle replays it (getis.crand_draw_ctes).
+Driver state is O(pool + perms·maxdeg) at any n, and the null is exact
+conditional randomization whenever n ≤ pool.  NULL values are dropped
+(the reference's NULL semantics); zero variance (all values equal) is a
+named error.
 """
 
 from __future__ import annotations
@@ -28,12 +36,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crankshaft_spark.operators.getis import SIM_POOL_DEFAULT
+from crankshaft_spark.operators.getis import SIM_POOL_DEFAULT, _crand_sim
 from crankshaft_spark.operators.weights import spatial_lag
 
 
-def _with_z(values: DataFrame, value_col: str) -> DataFrame:
-    """Attach global mean/Σz²/n via a broadcast single-row aggregate."""
+def _with_z(values: DataFrame, value_col: str, op: str) -> DataFrame:
+    """Drop NULL values, then attach global mean/Σz²/n via broadcast
+    single-row aggregates; the Σz² aggregate raises ``op``'s named
+    zero-variance error (every I_i would divide by Σz² = 0)."""
+    values = values.where(F.col(value_col).isNotNull())
     stats = values.agg(
         F.avg(value_col).alias("_mean"),
         F.count(value_col).alias("_n"),
@@ -41,7 +52,10 @@ def _with_z(values: DataFrame, value_col: str) -> DataFrame:
     vz = values.join(F.broadcast(stats)).withColumn(
         "_z", F.col(value_col) - F.col("_mean")
     )
-    den = vz.agg(F.sum(F.col("_z") * F.col("_z")).alias("_den"))
+    den = vz.agg(
+        F.when(F.min("_z") == F.max("_z"), F.raise_error(F.lit(
+            f"{op}: zero variance (all values equal)")))
+        .otherwise(F.sum(F.col("_z") * F.col("_z"))).alias("_den"))
     return vz.join(F.broadcast(den))
 
 
@@ -59,8 +73,22 @@ def moran_local(
     ``values``: (id, value_col); ``edges``: (id, nbr, w) row-standardized.
     Returns (id, quad, significance, spatial_lag, spatial_lag_std, orig_val,
     orig_val_std, local_i); ``significance`` is null when permutations=0.
+    Rows with a NULL value are dropped.
+
+    ``significance`` is the PySAL-folded conditional-randomization p_sim:
+    for row i, z_i is held fixed and each permutation draws deg(i) other
+    values (without replacement) by the keyed affine crand draw of
+    ``moran_local_hash_sim`` (same ``msim`` pool, templates and per-row
+    bijection — getis._crand_sim), recomputing I_i with row i's ACTUAL
+    weights, nbr-sorted, over the drawn values.  Per-row cost is
+    O(permutations·deg) with driver state O(pool + perms·maxdeg); the
+    draw is identical at any parallelism, and for integer values with
+    uniform row weights the p-values equal ``moran_local_hash_sim``'s.
+    Draw sims and I_i are compared at a 6dp pin (CLAUDE.md float rule:
+    both are ratios of independently ordered float aggregates).
+    Requires deg ≤ pool−1; empty or all-NULL input raises a named error.
     """
-    vz = _with_z(values, value_col)
+    vz = _with_z(values, value_col, "moran_local")
     # both lags (raw y and centered z) from ONE edge join — halves the
     # heavy shuffle; per-term float math identical to two separate lags
     nbr_vals = vz.select(
@@ -99,114 +127,31 @@ def moran_local(
     if permutations <= 0:
         out = base.withColumn("significance", F.lit(None).cast("double"))
     else:
-        out = _local_permutation_p(
-            base, values, value_col, edges, permutations, seed, pool_size
-        )
+        def stat(pdf, s):
+            c = {k: pdf[k].to_numpy(dtype=float)[:, None]
+                 for k in ("_n", "_z", "_mean", "_den", "local_i")}
+            # draws sum w·y; Σ w·(y − ȳ) = s − ȳ·Σw recentres them
+            wsum = np.array([np.sum(w) for w in pdf["_ws"]])[:, None]
+            sims = ((c["_n"] - 1) * c["_z"] * (s - c["_mean"] * wsum)
+                    / c["_den"])
+            larger = (np.round(sims, 6) >= np.round(c["local_i"], 6)
+                      ).sum(axis=1)
+            folded = np.minimum(larger, permutations - larger)
+            return pd.DataFrame({
+                "id": pdf["id"],
+                "significance": (folded + 1.0) / (permutations + 1.0)})
+
+        p = _crand_sim(
+            values, edges, value_col, op="moran_local", tag="msim",
+            seed=seed, permutations=permutations, pool_size=pool_size,
+            stat=stat, schema="id long, significance double", weights=True,
+            rows=base.select("id", "_z", "_mean", "_den", "local_i"),
+            persist=False)
+        out = base.join(p, "id")
     return out.select(
         "id", "quad", "significance", "spatial_lag", "spatial_lag_std",
         "orig_val", "orig_val_std", "local_i",
     )
-
-
-def _local_permutation_p(
-    base: DataFrame,
-    values: DataFrame,
-    value_col: str,
-    edges: DataFrame,
-    permutations: int,
-    seed: int,
-    pool_size: int | None = SIM_POOL_DEFAULT,
-) -> DataFrame:
-    """Conditional-randomization p_sim for local Moran.
-
-    For each row i: hold z_i fixed, draw deg(i)-sized samples (without
-    replacement) from the other z values, recompute I_i with row i's ACTUAL
-    weight vector, two-sided count — the same scheme PySAL's ``__crand``
-    uses (per-row RNG seeded from (seed, id) so results are independent of
-    partitioning/parallelism).  Per-row work is vectorized numpy; the
-    weight vector is applied in nbr-sorted order (sample values are
-    exchangeable, so any fixed deterministic order is valid and
-    parallelism-stable).
-
-    Driver/broadcast state is O(pool), never O(n): candidates come from a
-    hash-ranked uniform subsample of at most ``pool_size`` values
-    (getis._hash_pool) — exact conditional randomization when n ≤ pool.
-    n, mean and Σz² stay GLOBAL aggregates; per-row z_i/local_i ride the
-    Arrow batch from ``base``, so rows outside the pool still get p-values.
-    """
-    from crankshaft_spark.operators.getis import _hash_pool
-
-    deg = edges.groupBy("id").agg(
-        F.count("*").alias("_deg"),
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("nbr", "w"))),
-            lambda st: st["w"],
-        ).alias("_ws"),
-    )
-    spark = base.sparkSession
-    stats = values.agg(
-        F.count("*").alias("_n"), F.avg(F.col(value_col)).alias("_mean")
-    ).collect()[0]
-    n, mean = int(stats["_n"]), float(stats["_mean"])
-    den = float(
-        values.agg(F.sum(
-            (F.col(value_col) - F.lit(mean))
-            * (F.col(value_col) - F.lit(mean))
-        )).collect()[0][0]
-    )
-    ids, yl = _hash_pool(values, value_col, "lmsim-pool", pool_size)
-    zpool = np.array(yl, dtype=float) - mean
-    m = len(zpool)
-    bz = spark.sparkContext.broadcast(zpool)
-    bpos = spark.sparkContext.broadcast({v: i for i, v in enumerate(ids)})
-
-    schema = "id long, significance double"
-
-    def compute(pdfs):
-        for pdf in pdfs:
-            z = bz.value
-            pos = bpos.value
-            out_p = np.empty(len(pdf))
-            for row_i, (rid, d, ws, li, zi) in enumerate(
-                zip(pdf["id"], pdf["_deg"], pdf["_ws"], pdf["local_i"],
-                    pdf["_z"])
-            ):
-                rng = np.random.RandomState(
-                    (seed * 1000003 + int(rid)) % (2**32)
-                )
-                i = pos.get(int(rid), -1)  # self may be outside the pool
-                others = np.delete(z, i) if i >= 0 else z
-                if int(d) > len(others):
-                    raise ValueError(
-                        f"moran_local: deg({rid})={d} exceeds the "
-                        f"{len(others)} available pool candidates — raise "
-                        f"pool_size (got {m})")
-                idx = np.argsort(
-                    rng.random_sample((permutations, len(others))), axis=1
-                )[:, : int(d)]
-                w_vec = np.asarray(ws, dtype=float)
-                sims = (n - 1) * float(zi) * (others[idx] @ w_vec) / den
-                # 6dp pin (CLAUDE.md float rule): zi/li come from the
-                # in-plan _with_z aggregates while zpool/den come from
-                # separately-collected sums — three independent float
-                # aggregation orders feeding one knife-edge comparison
-                larger = int((np.round(sims, 6) >= round(float(li), 6)).sum())
-                if (permutations - larger) < larger:
-                    larger = permutations - larger
-                out_p[row_i] = (larger + 1.0) / (permutations + 1.0)
-            yield pd.DataFrame({"id": pdf["id"], "significance": out_p})
-
-    # pin parallelism: the per-row work is O(permutations·n) numpy but the
-    # input is a few KB, so AQE's byte-based coalescing would run the whole
-    # permutation stage in one task (functions/spread rationale)
-    from crankshaft_spark.functions.spread import spread_groups
-
-    withdeg = spread_groups(
-        base.join(deg, "id").select("id", "_deg", "_ws", "local_i", "_z"),
-        "id",
-    )
-    p = withdeg.mapInPandas(compute, schema=schema)
-    return base.join(p, "id")
 
 
 def moran_local_hash_sim(
@@ -223,14 +168,15 @@ def moran_local_hash_sim(
     """Local Moran with an ORACLE-EXPRESSIBLE permutation p_sim →
     (id, quad, local_i, p_sim).
 
-    Same conditional randomization as ``moran_local(permutations=k)`` but
-    the deg(i)-subsets are drawn by the keyed-hash PySAL-crand scheme of
-    getis_gstar_sim (a keyed affine bijection of hash-shuffled pool
-    positions per row, shared per-permutation rank templates τ_p —
-    getis._sim_slots / _crand_rank_sums, per-row cost O(perms·deg), no
-    sort) instead of a numpy RNG stream, so a DuckDB oracle can replay
-    the draw verbatim.  Requires deg ≤ pool−1 (the template's slot
-    count).
+    Same keyed-hash PySAL-crand draw as ``moran_local(permutations=k)``
+    and getis_gstar_sim (getis._crand_sim, tag ``msim``: a keyed affine
+    bijection of hash-shuffled pool positions per row, shared
+    per-permutation rank templates τ_p — per-row cost O(perms·deg), no
+    sort, no RNG stream), compared in exact integers so a DuckDB oracle
+    can replay it verbatim.  Requires deg ≤ pool−1 (the template's slot
+    count).  The neighbour table is persisted unless ``persist=False``
+    (handles appended to ``persist_registry``, the getis_gstar_sim
+    contract).
 
     Exactness contract (why every comparison is integer):
 
@@ -245,119 +191,32 @@ def moran_local_hash_sim(
     PySAL-folded: (min(larger, perms−larger)+1)/(perms+1).
 
     ``pool_size`` bounds driver/broadcast state to O(pool + perms·maxdeg)
-    (value pool + deg-truncated slot templates) and per-row compute to
-    O(permutations·deg): samples are drawn from a
+    (value pool + deg-truncated slot templates): samples are drawn from a
     hash-ranked uniform subsample of the values (getis._hash_pool, tag
     'msim-pool') — exact conditional randomization when n ≤ pool,
     replayable by the DuckDB oracle either way.  ``pool_size=None``
     forces the exact all-values pool (bounded inputs only).
     """
-    from crankshaft_spark.operators.getis import _h32_col, _hash_pool
+    def stat(pdf, s):
+        # sign test in unbounded Python ints (CLAUDE.md: cross-multiplied
+        # int64 comparisons wrap silently at scale); n and Σy are GLOBAL
+        sg = np.array([(int(y) * int(n) > int(t)) - (int(y) * int(n) < int(t))
+                       for y, n, t in zip(pdf["_y"], pdf["_n"],
+                                          pdf["_ysum"])])[:, None]
+        nb = pdf["_nbrsum"].to_numpy(dtype=np.int64)[:, None]
+        larger = ((sg == 0) | ((sg > 0) & (s >= nb))
+                  | ((sg < 0) & (s <= nb))).sum(axis=1)
+        folded = np.minimum(larger, permutations - larger)
+        return pd.DataFrame({
+            "id": pdf["id"], "p_sim": (folded + 1.0) / (permutations + 1.0)})
 
-    analytic = moran_local(values, edges, value_col=value_col)
-
-    # tolerate the same inputs the analytic path does: drop NULL values and
-    # edge sources absent from `values` (else pos[rid] KeyErrors in run())
-    values = values.where(F.col(value_col).isNotNull())
-    edges = edges.join(values.select("id"), "id", "left_semi")
-
-    spark = values.sparkSession
-    ids, yl = _hash_pool(values, value_col, "msim-pool", pool_size,
-                         cast="long")
-    y = np.array([int(v) for v in yl], dtype=np.int64)
-    m = len(y)  # pool size (== n when pool_size is None or n <= pool_size)
-    # n and Σy are GLOBAL (the sign test z_i = y_i·n − Σy uses the global
-    # mean), never pool aggregates
-    trow = values.agg(
-        F.count("*").alias("_n"),
-        F.sum(F.col(value_col).cast("long")).alias("_ysum")).collect()[0]
-    n, ysum = int(trow["_n"]), int(trow["_ysum"])
-    from crankshaft_spark.operators.getis import _sim_slots
-
-    nbr_stats = (
-        edges.select("id", "nbr")
-        .join(values.select(F.col("id").alias("nbr"),
-                            F.col(value_col).cast("long").alias("_yl")),
-              "nbr")
-        .groupBy("id")
-        .agg(F.count("*").alias("_deg"), F.sum("_yl").alias("_nbrsum"))
-        .join(values.select("id",
-                            F.col(value_col).cast("long").alias("_yself")),
-              "id")
-        .withColumn("_ha", _h32_col("msim-A", seed))
-        .withColumn("_hb", _h32_col("msim-B", seed))
-    )
-    # nbr_stats feeds TWO actions — the maxd aggregate and the sim input —
-    # so pin it or the edge join+groupBy executes twice (getis twin; same
-    # persist contract: callers collect the handle via persist_registry)
-    if persist:
-        nbr_stats = nbr_stats.persist()
-        if persist_registry is not None:
-            persist_registry.append(nbr_stats)
-    # deg-truncated templates: only the first deg rank slots are drawn,
-    # so the broadcast is O(perms·maxdeg) not O(perms·pool) (getis twin)
-    maxd = int(nbr_stats.agg(F.max("_deg")).first()[0] or 0)
-    if maxd > m - 1:
-        raise ValueError(
-            f"moran_local_hash_sim: max deg {maxd} exceeds the {m - 1} "
-            f"pool template slots — raise pool_size (got {m})")
-    by = spark.sparkContext.broadcast(y)
-    bpos = spark.sparkContext.broadcast({v: i for i, v in enumerate(ids)})
-    bslots = spark.sparkContext.broadcast(
-        _sim_slots("msim", seed, permutations, m)[:, :maxd])
-
-    schema = "id long, p_sim double"
-
-    def run(pdfs):
-        from crankshaft_spark.operators.getis import _crand_rank_sums
-
-        yv, pos = by.value, bpos.value
-        slots = bslots.value
-        for pdf in pdfs:
-            if not len(pdf):
-                yield pd.DataFrame([], columns=["id", "p_sim"])
-                continue
-            rids = [int(v) for v in pdf["id"]]
-            degs = [int(v) for v in pdf["_deg"]]
-            nbrsums = [int(v) for v in pdf["_nbrsum"]]
-            # sign test in unbounded Python ints (CLAUDE.md: cross-
-            # multiplied int64 comparisons wrap silently at scale)
-            sgs = [int(ys) * n - ysum for ys in pdf["_yself"]]
-            larger = np.full(len(rids), permutations, dtype=np.int64)
-            draw = [k for k, sg in enumerate(sgs) if sg != 0]
-            if draw:
-                r_d = [rids[k] for k in draw]
-                d_d = [degs[k] for k in draw]
-                excl = [pos.get(r, -1) for r in r_d]  # self may be off-pool
-                for rid, d in zip(r_d, d_d):
-                    if d > m - 1:
-                        raise ValueError(
-                            f"moran_local_hash_sim: deg({rid})={d} exceeds "
-                            f"the {m - 1} pool template slots — raise "
-                            f"pool_size (got {m})")
-                ha = pdf["_ha"].to_numpy(dtype=np.int64)[draw]
-                hb = pdf["_hb"].to_numpy(dtype=np.int64)[draw]
-                s = _crand_rank_sums(ha, hb, d_d, excl, yv, slots)
-                nb = np.array([nbrsums[k] for k in draw],
-                              dtype=np.int64)[:, None]
-                pos_sign = np.array([sgs[k] > 0 for k in draw])
-                larger[draw] = np.where(
-                    pos_sign, (s >= nb).sum(axis=1), (s <= nb).sum(axis=1))
-            folded = np.minimum(larger, permutations - larger)
-            yield pd.DataFrame({
-                "id": rids,
-                "p_sim": (folded + 1.0) / (permutations + 1.0)})
-
-    # same AQE pin as _local_permutation_p: tiny bytes, heavy per-row numpy
-    from crankshaft_spark.functions.spread import spread_groups
-
-    p = spread_groups(
-        nbr_stats.select("id", "_deg", "_nbrsum", "_yself", "_ha", "_hb"),
-        "id"
-    ).mapInPandas(run, schema)
-    return analytic.join(p, "id").select(
-        "id", "quad", "local_i", "p_sim"
-    )
+    p = _crand_sim(
+        values, edges, value_col, op="moran_local_hash_sim", tag="msim",
+        seed=seed, permutations=permutations, pool_size=pool_size,
+        stat=stat, schema="id long, p_sim double", cast="long",
+        persist=persist, persist_registry=persist_registry)
+    return moran_local(values, edges, value_col=value_col).join(
+        p, "id").select("id", "quad", "local_i", "p_sim")
 
 
 def moran_global(
@@ -370,7 +229,7 @@ def moran_global(
 
     Reference returns (I, EI) (moran.py:76-78 ``zip([I],[EI])``).
     """
-    vz = _with_z(values, value_col)
+    vz = _with_z(values, value_col, "moran_global")
     zdf = vz.select("id", F.col("_z").alias("value"))
     lag_z = spatial_lag(edges, zdf, out_col="_lagz")
     joined = vz.join(lag_z, "id")
@@ -455,7 +314,7 @@ def geary_local(
     endpoints, groupBy(id) partial-aggregated sum, then a broadcast
     one-row denominator — no new shuffle class, 100 TB-safe.
     """
-    vz = _with_z(values, value_col)
+    vz = _with_z(values, value_col, "geary_local")
     zj = vz.select(F.col("id").alias("nbr"), F.col("_z").alias("_zj"))
     zi = vz.select("id", F.col("_z").alias("_zi"), "_n", "_den")
     num = (
@@ -643,7 +502,8 @@ def moran_local_bivariate(
         I_i = (n−1)·z1_i·lag(z2)_i / Σ z1²,  quads from (z1, lag z2).
     Returns (id, quad, local_i).
     """
-    v1 = _with_z(values.select("id", F.col(attr1).alias("value")), "value")
+    v1 = _with_z(values.select("id", F.col(attr1).alias("value")), "value",
+                 "moran_local_bivariate")
     v2 = values.select("id", F.col(attr2).alias("value"))
     s2 = v2.agg(F.avg("value").alias("_m2"))
     z2 = v2.join(F.broadcast(s2)).select(

@@ -1202,8 +1202,9 @@ def o_orders_weighted_center():
 
 # ----------------------------------------- permutation inference ------------
 # Both sim entries use the keyed-linear-hash SRSWOR (getis.py docstring) so
-# the DuckDB oracle replays the draws verbatim; the numpy-RNG PySAL-replica
-# paths remain fixture-only (tests/test_moran.py, tests/test_getis.py).
+# the DuckDB oracle replays the draws verbatim; the one numpy-RNG path,
+# the PySAL replica getis_gstar_pysal_sim, stays fixture-only
+# (tests/test_getis.py).
 
 SIM_POOL = 512  # < n at sf0.01 (1500): the gate checks the BOUNDED pool path
 

@@ -155,7 +155,8 @@ def test_crand_rank_sums_kernel_properties():
     values — guards the chunk-size formula, (c) deg-truncated templates
     (slots[:, :maxdeg], what the operators broadcast) are draw-invariant,
     (d) the coprime window always yields a unit mod m (gcd(a, m) = 1),
-    including at a highly-composite m."""
+    including at a highly-composite m, (e) per-row weights (the
+    moran_local path) give Σ_k w_k·yv over the same draws."""
     import math
 
     import numpy as np
@@ -201,3 +202,22 @@ def test_crand_rank_sums_kernel_properties():
         st = _crand_rank_sums(ha, hb, degs, excl, yv,
                               slots[:, :max(degs)])
         assert np.array_equal(s, st)
+
+        # (e) weighted draws: scalar replay of Σ_k w[i, k]·yv[draw_k]
+        # (dyadic weights and integer values keep every sum exact, so
+        # the summation order cannot matter), chunked and truncated alike
+        wts = np.array([[(1 + (k * 3 + j) % 7) / 8 for j in range(max(degs))]
+                        for k in range(len(rids))])
+        sw = _crand_rank_sums(ha, hb, degs, excl, yv, slots, wts=wts)
+        for k, (d, ex) in enumerate(zip(degs, excl)):
+            a0 = 1 + int(ha[k]) % (m - 1)
+            a = next(1 + (a0 - 1 + t) % (m - 1) for t in range(_A_TRIES)
+                     if math.gcd(1 + (a0 - 1 + t) % (m - 1), m) == 1)
+            c = ex if ex >= 0 else int(hb[k]) % m
+            for p in range(perms):
+                drawn = [(c + a * int(q)) % m for q in slots[p, :d]]
+                assert sw[k, p] == sum(w * yv[j]
+                                       for w, j in zip(wts[k], drawn))
+        assert np.array_equal(sw, _crand_rank_sums(
+            ha, hb, degs, excl, yv, slots[:, :max(degs)], wts=wts,
+            max_elems=1))

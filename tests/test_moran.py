@@ -85,6 +85,30 @@ def test_moran_local_hash_sim_integer_contract(spark, values_and_edges):
     assert re == {rid: r["p_sim"] for rid, r in got.items()}
 
 
+def test_moran_local_permuted_matches_hash_sim(values_and_edges):
+    """moran_local(permutations=k) draws with moran_local_hash_sim's keyed
+    crand draw: on integer values with uniform row weights its weighted
+    float comparison gives the hash sim's exact integer p_sim row for
+    row, and the draw does not depend on input partitioning."""
+    from pyspark.sql import functions as F
+
+    from crankshaft_spark.operators.moran import moran_local_hash_sim
+
+    _, edges = values_and_edges
+    values = edges.select("id").distinct().select(
+        "id", ((F.col("id") * 41) % 7).cast("double").alias("value"))
+    sig = {r["id"]: r["significance"] for r in moran_local(
+        values, edges, permutations=19, seed=7).collect()}
+    hsim = {r["id"]: r["p_sim"] for r in moran_local_hash_sim(
+        values, edges, permutations=19, seed=7).collect()}
+    assert len(sig) == 52
+    assert sig == hsim
+    re = {r["id"]: r["significance"] for r in moran_local(
+        values.repartition(13), edges.repartition(7),
+        permutations=19, seed=7).collect()}
+    assert re == sig
+
+
 def test_moran_global_fixture(values_and_edges, moran_fixture):
     values, edges = values_and_edges
     row = moran_global(values, edges, value_col="value").first()
