@@ -67,6 +67,12 @@ class _Scope:
         _release_rdds(self._sc, ids)
         self._ids -= ids
 
+    def own(self, df: DataFrame) -> DataFrame:
+        """Take over the checkpoint another call handed out with ``keep``
+        (released with this scope's own)."""
+        self._ids |= _checkpointed_rdd_ids(df)
+        return df
+
     def keep(self, *dfs: DataFrame) -> None:
         for df in dfs:
             self._ids -= _checkpointed_rdd_ids(df)

@@ -447,12 +447,8 @@ def embedding_near_dedup(
     id) or the min-id member by default → the surviving rows, all
     columns intact.
 
-    The pair table is localCheckpointed before components:
-    dedup_components references its pair input several times (edges
-    union + node seeding) and an unmaterialized SRP pipeline would
-    re-run the bucket join per reference (CLAUDE.md round-3 lesson).
-    Pairs endpoints are embeddings ids by construction, so the keeper is
-    always a real row (no external-pairs hazard here).
+    A thin caller of dedup._near_dedup.  Pairs endpoints are embeddings
+    ids by construction, so the keeper is always a real row.
 
     ``pairs=`` / ``components=`` reuse precomputed stages (the
     near_dedup convention): a caller that already materialized the SRP
@@ -461,16 +457,11 @@ def embedding_near_dedup(
     must come from ``dedup_components`` over the SAME embeddings/pairs
     with the same ``keep_col``; when given, ``pairs``/``keep_col``/SRP
     knobs are ignored."""
-    from crankshaft_spark.operators.dedup import dedup_components
+    from crankshaft_spark.operators.dedup import _near_dedup
 
-    comp = components
-    if comp is None:
-        if pairs is None:
-            pairs = embedding_neardup_pairs(
-                embeddings, dims=dims, n_planes=n_planes,
-                threshold=threshold, id_col=id_col, vec_col=vec_col,
-            ).localCheckpoint(eager=True)
-        comp = dedup_components(
-            embeddings, pairs, id_col=id_col, keep_col=keep_col)
-    dropped = comp.where(~F.col("is_keep")).select(id_col)
-    return embeddings.join(dropped, id_col, "anti")
+    if components is None and pairs is None:
+        pairs = embedding_neardup_pairs(
+            embeddings, dims=dims, n_planes=n_planes,
+            threshold=threshold, id_col=id_col, vec_col=vec_col)
+    return _near_dedup(embeddings, embeddings, pairs, id_col=id_col,
+                       keep_col=keep_col, components=components)

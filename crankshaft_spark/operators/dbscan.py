@@ -45,6 +45,7 @@ from crankshaft_spark.functions.cells import (
     CELL_M, cell_expr, cell_sql, ring_cells_expr)
 from crankshaft_spark.functions.distance import (
     planar_dist2, planar_dist2_sql)
+from crankshaft_spark.operators._fixpoint import _Scope
 from crankshaft_spark.operators.dedup import dedup_components, reach_ctes
 
 __all__ = ["dbscan", "dbscan_oracle_sql"]
@@ -99,8 +100,10 @@ def dbscan(
         F.col(id_col).alias("id"),
         F.col(x).alias("x"), F.col(y).alias("y"),
     )
-    edges = _eps_edges(pts, eps).persist()
-    try:
+    with _Scope(df.sparkSession) as scope:
+        # three consumers (counts, core pairs, border join): a lazy cut
+        # is filled by the first job that reads it, so it costs no job
+        edges = scope.cut(_eps_edges(pts, eps), eager=False)
         ncnt = edges.groupBy("id").agg(F.count("*").alias("n_nbrs"))
         stats = (
             pts.join(ncnt, "id", "left")
@@ -116,11 +119,11 @@ def dbscan(
             .join(cores.select(F.col("id").alias("nid")), "nid")
             .select(F.col("id").alias("a"), F.col("nid").alias("b"))
         )
-        comp = dedup_components(
+        comp = scope.own(dedup_components(
             cores.select(F.col("id").alias("doc_id")), core_pairs,
             max_rounds=max_rounds,
-        ).select(F.col("doc_id").alias("id"),
-                 F.col("component").cast("long").alias("cluster"))
+        )).select(F.col("doc_id").alias("id"),
+                  F.col("component").cast("long").alias("cluster"))
         # border: non-core with a core neighbor takes the MIN core
         # neighbor's component (pinned tie-break; the paper leaves this
         # scan-order-dependent when a border point touches two clusters)
@@ -135,17 +138,13 @@ def dbscan(
             .unionByName(
                 border.select("id", "cluster", F.lit("border").alias("role")))
         )
-        out = (
+        rows = scope.cut(
             stats.join(labeled, "id", "left")
             .select("id", F.col("cluster").cast("long").alias("cluster"),
                     F.coalesce(F.col("role"), F.lit("noise")).alias("role"),
-                    "n_eps")
-        )
-        # the persisted edge table feeds three consumers (counts, core
-        # pairs, border join); materialize the result before releasing it
-        return out.localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
+                    "n_eps"))
+        scope.keep(rows)
+    return rows
 
 
 def dbscan_oracle_sql(pts_sql: str, *, eps: float, min_pts: int) -> str:

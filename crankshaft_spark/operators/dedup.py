@@ -125,32 +125,54 @@ def minhash_lsh_pairs(
     )
 
 
-def _keepers_from_components(
-    docs: DataFrame, components: DataFrame, id_col: str,
-    keep_col: str | None,
-) -> DataFrame:
-    """One keeper id per component, chosen ONLY among members present in
-    ``docs``.  Components whose every member is a pair-only id (absent
-    from docs) contribute no keeper — there is nothing of theirs in docs
-    to keep.  Default keeper = min docs-member id; ``keep_col`` switches
-    to the best-scoring docs member (ties → min id, NULL scores lose to
-    any scored member)."""
-    members = components.select(id_col, "component").join(
-        docs.select(id_col).distinct(), id_col, "semi")
+def _best_member(members: DataFrame, scored: DataFrame, id_col: str,
+                 keep_col: str | None) -> DataFrame:
+    """(component, _bid) — the near-dedup family's one keeper rule: per
+    component of ``members`` (id_col, component), the member with the
+    highest ``keep_col`` in ``scored`` (higher = better; ties go to the
+    min id, and a NULL or missing score loses to any scored member), or
+    the min id without ``keep_col``.  Duplicate ``scored`` rows collapse
+    to the id's best score instead of fanning the members out."""
     if keep_col is None:
-        best = members.groupBy("component").agg(F.min(id_col).alias("_bid"))
+        return members.groupBy("component").agg(F.min(id_col).alias("_bid"))
+    kv = scored.groupBy(id_col).agg(F.max(keep_col).alias("_kv"))
+    neg = -F.coalesce(F.col("_kv").cast("double"), F.lit(float("-inf")))
+    return (
+        members.join(kv, id_col, "left")
+        .groupBy("component")
+        .agg(F.min(F.struct(neg.alias("_neg"), F.col(id_col).alias("_bid")))
+             .alias("_b"))
+        .select("component", "_b._bid")
+    )
+
+
+def _near_dedup(
+    rows: DataFrame, scored: DataFrame, pairs: DataFrame | None, *,
+    id_col: str, keep_col: str | None = None,
+    components: DataFrame | None = None, rechoose: bool = False,
+) -> DataFrame:
+    """The one near-dedup composition (near_dedup, embedding_near_dedup,
+    media_near_dedup, audio_near_dedup): ``pairs`` → dedup_components
+    over ``scored`` (or the caller's ``components``) → ``rows``
+    anti-joined with the ids that lose their cluster, so uncovered ids
+    survive.  The keeper is is_keep, chosen inside dedup_components' own
+    cut: the result never reads ``scored`` again, so it may be released.
+    ``rechoose`` re-chooses it by the same rule (_best_member) among the
+    members present in ``rows``: external pairs can make a pair-only id
+    the label (rows={5,6,9}, pairs={(3,5),(5,6)} labels 5 and 6 as 3)."""
+    if components is None:
+        components = dedup_components(
+            scored, pairs, id_col=id_col,
+            keep_col=None if rechoose else keep_col)
+    if rechoose:
+        members = components.select(id_col, "component").join(
+            rows.select(id_col), id_col, "semi")
+        best = _best_member(members, rows, id_col, keep_col)
+        drop = members.join(
+            best.select(F.col("_bid").alias(id_col)), id_col, "anti")
     else:
-        m = docs.groupBy(id_col).agg(F.max(keep_col).alias("_kv"))
-        neg = -F.coalesce(F.col("_kv").cast("double"), F.lit(float("-inf")))
-        best = (
-            members.join(m, id_col, "left")
-            .withColumn("_neg", neg)
-            .groupBy("component")
-            .agg(F.min(F.struct("_neg", F.col(id_col).alias("_bid")))
-                 .alias("_b"))
-            .select("component", F.col("_b._bid").alias("_bid"))
-        )
-    return best.select(F.col("_bid").alias(id_col))
+        drop = components.where(~F.col("is_keep"))
+    return rows.join(drop.select(id_col), id_col, "anti")
 
 
 def near_dedup(
@@ -163,50 +185,25 @@ def near_dedup(
     """The one-call near-dedup a training pipeline runs: MinHash+LSH
     candidate pairs → connected components → keep one doc per transitive
     cluster (``keep_col`` keeps the best-scoring member, default the
-    min-id one) → the surviving docs, all columns intact.  Pure
-    composition of minhash_lsh_pairs + dedup_components; gate-checked
-    end-to-end via the minhash_lsh entry's survivor arm.  Scale shape:
-    the only addition over the parts is one aggregate over the (tiny)
-    components table plus one semi-join of docs against the keeper ids
-    (no broadcast forced — AQE broadcasts when the keeper side fits and
-    falls back to a shuffled semi-join when it doesn't; pytest drives
-    the fallback with autoBroadcastJoinThreshold=-1).
-
-    The keeper is always chosen AMONG MEMBERS PRESENT IN DOCS
-    (_keepers_from_components): the component label itself can be a
-    pair-only id when external ``pairs`` mention ids absent from docs —
-    e.g. docs={5,6,9}, pairs={(3,5),(5,6)}: the label is 3, and keeping
-    "component == id" would silently drop ALL of {5,6}.  Same hazard via
-    ``keep_col`` when every docs member of a component is NULL-scored
-    and a smaller pair-only id exists.
+    min-id one) → the surviving docs, all columns intact, via the shared
+    composition (_near_dedup) with the keeper chosen AMONG DOCS MEMBERS.
+    Gate-checked end-to-end via the minhash_lsh entry's survivor arm.  No
+    broadcast is forced on the survivor anti-join (pytest drives the
+    shuffled fallback with autoBroadcastJoinThreshold=-1).
 
     ``pairs`` supplies precomputed candidate pairs (skipping the MinHash
-    stage); otherwise pairs are computed here and localCheckpointed,
-    since dedup_components references them several times (edges union +
-    node seeding) and an unmaterialized LSH pipeline would re-execute
-    per reference.  ``components`` supplies a precomputed
-    dedup_components output (only its (id, component) labels are used —
-    keeper policy is re-derived here), letting a caller that already ran
-    label propagation (the minhash_lsh gate entry) avoid paying it
-    twice; it takes precedence over ``pairs``.  ``docs`` must be unique
-    per ``id_col`` (the engine-wide contract): duplicate id rows pass
-    the semi-join verbatim."""
-    if components is None:
-        if pairs is None:
-            pairs = minhash_lsh_pairs(
-                docs, text_col=text_col, n=n, k=k, bands=bands,
-                threshold=threshold, id_col=id_col,
-            ).localCheckpoint(eager=True)
-        components = dedup_components(docs, pairs, id_col=id_col)
-    keepers = _keepers_from_components(docs, components, id_col, keep_col)
-    # docs ids ABSENT from the components table are unclustered singletons
-    # and must survive: dedup_components seeds every docs id, but a
-    # caller-supplied components= built from a different docs snapshot
-    # (stale checkpoint, pre-filter docs) would otherwise silently delete
-    # every uncovered row via the semi-join
-    uncovered = docs.select(id_col).distinct().join(
-        components.select(id_col), id_col, "left_anti")
-    return docs.join(keepers.unionByName(uncovered), id_col, "semi")
+    stage); ``components`` a precomputed dedup_components output (only
+    its labels are used; it takes precedence over ``pairs``), letting a
+    caller that already ran label propagation (the minhash_lsh gate
+    entry) avoid paying it twice.  Docs ids it does not cover survive.
+    ``docs`` must be unique per ``id_col`` (the engine-wide contract):
+    duplicate id rows pass the anti-join verbatim."""
+    if components is None and pairs is None:
+        pairs = minhash_lsh_pairs(
+            docs, text_col=text_col, n=n, k=k, bands=bands,
+            threshold=threshold, id_col=id_col)
+    return _near_dedup(docs, docs, pairs, id_col=id_col, keep_col=keep_col,
+                       components=components, rechoose=True)
 
 
 def minhash_oracle_sql(docs_sql: str, *, n: int = 4, k: int = MINHASH_K,
@@ -511,11 +508,11 @@ def dedup_components(
     per-component aggregate + broadcast-sized join over the tiny
     components table; the component labels themselves are unchanged.
     The catalog entry gates the default policy; keep_col is pytest-pinned.
-    NOTE: keepers here are graph-level — a pair-only id (present in
-    ``pairs`` but absent from ``docs``) CAN be the keeper of its
-    component.  ``near_dedup`` re-derives keepers restricted to docs
-    members (_keepers_from_components); use that for keep-one-per-cluster
-    filtering of docs.
+    Keepers here are graph-level: a pair-only id (present in ``pairs``
+    but absent from ``docs``) CAN be the keeper of its component.  The
+    near-dedup composition (_near_dedup) filters rows down to one keeper
+    per cluster by the same rule (_best_member), among rows members
+    only when asked.
 
     Algorithm: hash-min label propagation with pointer jumping.  Every node
     starts with its own id; each round every node takes the min label over
@@ -539,22 +536,22 @@ def dedup_components(
     # still seed a label row — labels starting incomplete made the
     # changed-count join (which matches on id) blind to newly ADDED rows,
     # so propagation could declare convergence one round early and split
-    # a component (found by the keep_col edge test; identical when
-    # pairs ⊆ docs, the catalog case)
+    # a component (found by the keep_col edge test).  The labels seed
+    # from the nodes' self-loops in the cut edge table, so ``pairs`` is
+    # read by the edge cut only (a self-pair just repeats a seed row).
+    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     nodes = (
-        docs.select(F.col(id_col).alias("id"))
-        .unionByName(pairs.select(F.col("a").alias("id")))
-        .unionByName(pairs.select(F.col("b").alias("id")))
+        docs.select(F.col(id_col).alias("src"))
+        .unionByName(und.select("src"))
+        .unionByName(und.select(F.col("dst").alias("src")))
         .distinct()
     )
-    und = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     with _Scope(docs.sparkSession) as scope:
         edges = scope.cut(
             und
             .unionByName(und.select(F.col("dst").alias("src"),
                                     F.col("src").alias("dst")))
-            .unionByName(nodes.select(F.col("id").alias("src"),
-                                      F.col("id").alias("dst")))
+            .unionByName(nodes.select("src", F.col("src").alias("dst")))
         )
 
         def step(labels: DataFrame, _k: int) -> DataFrame:
@@ -587,45 +584,30 @@ def dedup_components(
 
         labels = _fixpoint(
             scope, step,
-            scope.cut(nodes.select("id", F.col("id").alias("lbl"))),
+            scope.cut(edges.where(F.col("src") == F.col("dst"))
+                      .select(F.col("src").alias("id"),
+                              F.col("src").alias("lbl"))),
             rounds=max_rounds, until=unchanged, label="dedup_components")
-        sizes = labels.groupBy(F.col("lbl").alias("component")).agg(
-            F.count("*").alias("n_members"))
-        out = (
-            labels.join(sizes, labels["lbl"] == sizes["component"])
-            .select(
-                F.col("id").alias(id_col),
-                "component",
-                "n_members",
-                (F.col("id") == F.col("component")).alias("is_keep"),
-            )
-        )
+        members = labels.select(F.col("id").alias(id_col),
+                                F.col("lbl").alias("component"))
+        out = members.join(
+            members.groupBy("component").agg(F.count("*").alias("n_members")),
+            "component")
+        keep = F.col(id_col) == F.col("component")
         if keep_col is not None:
-            # best-scoring member per component: min over struct(-score,
-            # id) is deterministic under ties (min id) and NULL scores
-            # coalesce to -inf so they lose to any scored member.  LEFT
-            # join + per-id max keep the output row set identical to the
-            # default policy: pair-only nodes (no docs row) stay —
-            # scoreless, so they can only win an all-scoreless component
-            # by min id — and duplicate docs rows collapse to the doc's
-            # best score instead of fanning the output out.
-            score = F.coalesce(
-                F.col("_kv").cast("double"), F.lit(float("-inf")))
-            m = docs.groupBy(id_col).agg(F.max(keep_col).alias("_kv"))
-            scored = (out.drop("is_keep").join(m, id_col, "left")
-                      .withColumn("_neg", -score))
-            best = scored.groupBy("component").agg(
-                F.min(F.struct(F.col("_neg"), F.col(id_col).alias("_bid"))
-                      ).alias("_b"))
-            out = (scored.join(best, "component")
-                   .select(id_col, "component", "n_members",
-                           (F.col(id_col) == F.col("_b._bid"))
-                           .alias("is_keep")))
+            # a LEFT join inside _best_member keeps the output row set
+            # identical to the default policy: pair-only nodes (no docs
+            # row) stay — scoreless, so they can only win an all-
+            # scoreless component by min id
+            out = out.join(
+                _best_member(members, docs, id_col, keep_col), "component")
+            keep = F.col(id_col) == F.col("_bid")
         # localCheckpoint is executor-local (not fault-tolerant storage) —
         # on a real cluster an executor loss fails the job rather than
         # recomputing; acceptable for a deterministic batch op, and the
         # output is one small row per doc.
-        rows = scope.cut(out)
+        rows = scope.cut(out.select(id_col, "component", "n_members",
+                                    keep.alias("is_keep")))
         scope.keep(rows)
     return rows
 

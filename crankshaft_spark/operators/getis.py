@@ -41,10 +41,10 @@ from pyspark.sql import functions as F
 
 
 def _gs(values: DataFrame, edges: DataFrame, value_col: str) -> DataFrame:
-    """(id, deg, gs) with gs = (Σ_nbr y + y_i)/((deg+1)·Σy)."""
+    """(id, deg, gs) with gs = (Σ_nbr y + y_i)/((deg+1)·Σy) over the
+    valued rows (the reference drops NULL-valued rows)."""
+    values = values.where(F.col(value_col).isNotNull())
     # deg + neighbor sum in ONE aggregation over the joined edge table
-    # (neighbors always carry values here — edges are built from the same
-    # NULL-filtered point set, matching the reference's drop semantics)
     nbr_stats = (
         edges.select("id", "nbr")
         .join(
@@ -55,7 +55,8 @@ def _gs(values: DataFrame, edges: DataFrame, value_col: str) -> DataFrame:
         .agg(F.count("*").alias("deg"), F.sum("_y").alias("_nbrsum"))
     )
     tot = values.agg(
-        F.sum(value_col).alias("_ysum"),
+        _ysum_checked(F.col(value_col), "getis_gstar", nonzero=True)
+        .alias("_ysum"),
         F.sum(F.col(value_col) * F.col(value_col)).alias("_y2sum"),
         F.count(value_col).alias("_n"),
     )
@@ -69,6 +70,18 @@ def _gs(values: DataFrame, edges: DataFrame, value_col: str) -> DataFrame:
             / ((F.col("deg") + 1) * F.col("_ysum")),
         )
     )
+
+
+def _ysum_checked(y, op: str, *, nonzero: bool):
+    """Σy, raising ``<op>: zero variance`` when all values are equal and,
+    with ``nonzero`` (Gi* divides by Σy; Moran centres its values, so a
+    zero sum is valid there), ``<op>: values sum to zero``."""
+    ysum = F.sum(y)
+    if nonzero:
+        ysum = F.when(ysum == 0, F.raise_error(F.lit(
+            f"{op}: values sum to zero"))).otherwise(ysum)
+    return F.when(F.min(y) == F.max(y), F.raise_error(F.lit(
+        f"{op}: zero variance (all values equal)"))).otherwise(ysum)
 
 
 def getis_gstar(
@@ -87,6 +100,8 @@ def getis_gstar(
     with m_i, σ²_i the mean/population-variance of the other n−1 values —
     pure aggregates + join algebra, no Python, no collect.
     p_value is the two-sided normal tail (erfc-based, JVM-side).
+    NULL-valued rows are dropped; zero variance and a zero value sum
+    raise errors naming the operator.
     """
     g = _gs(values, edges, value_col)
     m_i = (F.col("_ysum") - F.col("_y")) / (F.col("_n") - 1)
@@ -354,7 +369,8 @@ def _crand_rank_sums(ha, hb, degs, excl, yv, slots, wts=None,
 
 def _crand_sim(values, edges, value_col, *, op, tag, seed, permutations,
                pool_size, stat, schema, cast="double", weights=False,
-               rows=None, persist=True, persist_registry=None):
+               rows=None, persist=True, persist_registry=None,
+               nonzero_sum=False):
     """The Spark side of a keyed-affine crand sim — ONE copy for every sim
     operator → the lazy per-row ``stat`` frame of ``schema``.
 
@@ -387,7 +403,8 @@ def _crand_sim(values, edges, value_col, *, op, tag, seed, permutations,
     the columns above, the columns of ``rows`` (joined on id) and the
     global ``_n``/``_ysum`` — a broadcast aggregate, joined after the
     repartition so it adds no shuffle bytes, that also raises the named
-    zero-variance error (no extra action)."""
+    zero-variance error and, with ``nonzero_sum``, the zero-sum one (no
+    extra action)."""
     from crankshaft_spark.functions.spread import spread_groups
 
     values = values.where(F.col(value_col).isNotNull())
@@ -444,9 +461,7 @@ def _crand_sim(values, edges, value_col, *, op, tag, seed, permutations,
 
     tot = y.agg(
         F.count("*").alias("_n"),
-        F.when(F.min("_y") == F.max("_y"), F.raise_error(F.lit(
-            f"{op}: zero variance (all values equal)")))
-        .otherwise(F.sum("_y")).alias("_ysum"),
+        _ysum_checked(F.col("_y"), op, nonzero=nonzero_sum).alias("_ysum"),
     )
     sim_in = sim_in.select("*", _h32_col(f"{tag}-A", seed).alias("_ha"),
                            _h32_col(f"{tag}-B", seed).alias("_hb"))
@@ -506,8 +521,8 @@ def getis_gstar_sim(
     crawl scale prefer the analytic ``getis_gstar`` (pure column algebra)
     — p_sim resolution is bounded by 1/(permutations+1), not n — but with
     a small pool (1024) this path runs at 10M+ rows (scalebench sim row).
-    Empty / all-NULL input and zero variance raise errors naming the
-    operator.
+    Empty / all-NULL input, zero variance and a zero value sum raise
+    errors naming the operator.
 
     The s ≥ nbrsum comparison is pinned at 6dp on both sides: nbrsum is a
     Spark float sum whose partial-aggregation order varies with
@@ -533,6 +548,7 @@ def getis_gstar_sim(
         values, edges, value_col, op="getis_gstar_sim", tag="gsim",
         seed=seed, permutations=permutations, pool_size=pool_size,
         stat=stat, persist=persist, persist_registry=persist_registry,
+        nonzero_sum=True,
         schema=("id long, _y double, _deg long, _nbrsum double, _n long, "
                 "_ysum double, _larger long, _ssum double, _s2sum double"))
     # per feeds BOTH the pooled moments and the final join

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crankshaft_spark.operators._fixpoint import _Scope
+
 MAGIC = b"CSMM"
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 KINDS = {0: "image", 1: "audio", 2: "video"}
@@ -698,27 +700,15 @@ def media_near_dedup(
     uniformly rescaled copy hashes identically and the resolution keep
     policy retains the best original.  Rows that don't fingerprint
     (non-image, undecodable, <8×8) cannot pair and pass through
-    untouched; the final step is one anti-join of media against the
-    dropped-id set.  The fingerprint table and the pair set are both
-    localCheckpointed: dedup_components references its inputs several
-    times (edges union + node seeding + the keep_col aggregate), and an
-    unmaterialized hash table would re-run the Python image decode —
-    the dominant cost — once per reference."""
-    from crankshaft_spark.operators.dedup import dedup_components
-
-    hashes = image_ahash(media, decoder=decoder).localCheckpoint(eager=True)
-    pairs = ahash_pairs(hashes, max_hamming=max_hamming).localCheckpoint(
-        eager=True)
-    # long math: width*height overflows INT at ~2.1 gigapixels, which
-    # ANSI mode turns into a job-killing ArithmeticException
-    scored = hashes.select(
-        "media_id",
-        (F.col("width").cast("long") * F.col("height").cast("long"))
-        .alias("_res"))
-    comp = dedup_components(
-        scored, pairs, id_col="media_id", keep_col="_res")
-    dropped = comp.where(~F.col("is_keep")).select("media_id")
-    return media.join(dropped, "media_id", "anti")
+    untouched.  A thin caller of dedup._near_dedup over a fingerprint
+    table cut once (pairs and keeper scores both read it, and a recompute
+    re-runs the Python decode, the dominant cost) and released on return
+    or error; the result reads only ``media`` and the components."""
+    return _fingerprint_near_dedup(
+        media, image_ahash(media, decoder=decoder), max_hamming, "ahash",
+        # long math: width*height overflows INT at ~2.1 gigapixels,
+        # which ANSI mode turns into a job-killing ArithmeticException
+        F.col("width").cast("long") * F.col("height").cast("long"))
 
 
 def audio_near_dedup(
@@ -731,21 +721,25 @@ def audio_near_dedup(
     way aHash is scale-free: a sample-doubled (time-stretched) copy
     hashes identically, and the length keep policy retains the
     highest-fidelity original.  Rows that don't fingerprint (non-audio,
-    undecodable, <64 samples) pass through untouched.  Same
-    materialization contract as media_near_dedup (fingerprints and pairs
-    localCheckpointed — dedup_components multi-references its inputs)."""
-    from crankshaft_spark.operators.dedup import dedup_components
+    undecodable, <64 samples) pass through untouched.  Same composition
+    and fingerprint-table scope as media_near_dedup."""
+    return _fingerprint_near_dedup(
+        media, audio_fingerprint(media, decoder=decoder), max_hamming, "fp",
+        F.col("n_samples").cast("long"))
 
-    fps = audio_fingerprint(media, decoder=decoder).localCheckpoint(
-        eager=True)
-    pairs = ahash_pairs(fps, max_hamming=max_hamming, col="fp") \
-        .localCheckpoint(eager=True)
-    scored = fps.select(
-        "media_id", F.col("n_samples").cast("long").alias("_len"))
-    comp = dedup_components(
-        scored, pairs, id_col="media_id", keep_col="_len")
-    dropped = comp.where(~F.col("is_keep")).select("media_id")
-    return media.join(dropped, "media_id", "anti")
+
+def _fingerprint_near_dedup(media: DataFrame, fps: DataFrame,
+                            max_hamming: int, col: str, score) -> DataFrame:
+    """``media`` minus the non-keepers of the Hamming near-dup clusters
+    of ``fps``' hex column ``col``, the best ``score`` kept per cluster."""
+    from crankshaft_spark.operators.dedup import _near_dedup
+
+    with _Scope(media.sparkSession) as scope:
+        fps = scope.cut(fps)
+        return _near_dedup(
+            media, fps.select("media_id", score.alias("_score")),
+            ahash_pairs(fps, max_hamming=max_hamming, col=col),
+            id_col="media_id", keep_col="_score")
 
 
 def frame_sample(

@@ -13,22 +13,31 @@ physical-design decisions that matter at 100 TB:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GB, from 1g up to 32g."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, phys // 2 ** 31))}g"
 
 
 def session_conf(builder: SparkSession.Builder, shuffle_partitions: int = 32,
                  driver_memory: str | None = None):
     """Apply engine defaults to a SparkSession builder.
 
-    ``driver_memory`` (env ``SPARK_GRAFT_DRIVER_MEM``, default 32g): in
-    local mode the driver JVM hosts every executor thread, so the heap must
-    scale with the thread count — an undersized heap turns the string-heavy
-    stages into a GC storm that flatlines core scaling (-Xmx is reserved
-    lazily; a large cap on a small test run costs nothing).
+    ``driver_memory`` (env ``SPARK_GRAFT_DRIVER_MEM``, default half the
+    host's physical memory, at most 32g): in local mode the driver JVM
+    hosts every executor thread, so the heap must scale with the thread
+    count — an undersized heap turns the string-heavy stages into a GC
+    storm that flatlines core scaling.  The cap is not free: G1 grows the
+    heap toward it rather than collecting, so a cap above the host's
+    memory lets the JVM outgrow the host and be killed.
     """
-    import os
-
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    mem = (driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+           or _default_driver_memory())
     return (
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

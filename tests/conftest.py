@@ -12,11 +12,11 @@ FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures")
 
 @pytest.fixture(scope="session")
 def spark():
-    # The engine's default 32g heap cap lets the test JVM's garbage grow
-    # its heap to ~11 GB RSS over the suite (G1 expands rather than
-    # collects); on a host whose memory is shared, that is what gets the
-    # JVM killed mid-suite.  The test inputs fit a 2 g heap, so cap the
-    # test session at 3 g unless the caller chose a size.
+    # A 32g heap cap let the test JVM's garbage grow its heap to ~11 GB
+    # RSS over the suite (G1 expands rather than collects); on a host
+    # whose memory is shared, that is what gets the JVM killed mid-suite.
+    # The test inputs fit a 2 g heap, so cap the test session at 3 g
+    # unless the caller chose a size.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
     s = get_session(master="local[4]", app_name="crankshaft_spark_tests",
                     shuffle_partitions=8)

@@ -840,9 +840,10 @@ def test_near_dedup_keeper_restricted_to_docs(spark):
 
 def test_near_dedup_components_reuse_and_shuffle_fallback(spark):
     """components= reuses precomputed labels (same survivors as the
-    pairs= path, keeper policy re-derived) and the survivor semi-join
+    pairs= path, keeper policy re-derived) and the survivor anti-join
     degrades to a shuffled SortMergeJoin when broadcasting is disabled —
-    the documented scale bailout for keeper sets beyond broadcast size."""
+    the documented scale bailout for dropped-id sets beyond broadcast
+    size."""
     from crankshaft_spark.operators.dedup import dedup_components, near_dedup
 
     text_a = "the quick brown fox jumps over the lazy dog again and again"
@@ -865,7 +866,7 @@ def test_near_dedup_components_reuse_and_shuffle_fallback(spark):
         assert rows == [1, 3]
         plan = nb._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        assert "LeftSemi" in plan
+        assert "LeftAnti" in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 

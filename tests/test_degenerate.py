@@ -3,15 +3,16 @@ that names the operator, never a raw stack trace or a NULL-valued row.
 
 The matrix covers the permutation-sim entry points (``getis_gstar_sim``,
 ``moran_local_hash_sim``, ``moran_local(permutations=k)``) and the
-analytic ``moran_local``.  The reference drops NULL-valued rows
-(SURVEY §1.1).
+analytic ``moran_local`` and ``getis_gstar``.  The reference drops
+NULL-valued rows (SURVEY §1.1).  Gi* divides by the value sum, so a zero
+sum is an error there; Moran centres its values, so it is valid input.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from crankshaft_spark.operators.getis import getis_gstar_sim
+from crankshaft_spark.operators.getis import getis_gstar, getis_gstar_sim
 from crankshaft_spark.operators.moran import (
     moran_hotspots,
     moran_local,
@@ -21,19 +22,26 @@ from crankshaft_spark.operators.moran import (
 PERMS = 9
 
 ENTRIES = {
-    # name: (call, op named in the no-rows error, zero-variance pattern)
+    # name: (call, op named in the no-rows error, zero-variance pattern,
+    #        zero-sum pattern or None when a zero sum is valid input)
     "getis_gstar_sim": (
         lambda v, e: getis_gstar_sim(v, e, permutations=PERMS, seed=7),
-        "getis_gstar_sim", "getis_gstar_sim: zero variance"),
+        "getis_gstar_sim", "getis_gstar_sim: zero variance",
+        "getis_gstar_sim: values sum to zero"),
     "moran_local_hash_sim": (
         lambda v, e: moran_local_hash_sim(v, e, permutations=PERMS, seed=7),
-        "moran_local_hash_sim", "moran_local(_hash_sim)?: zero variance"),
+        "moran_local_hash_sim", "moran_local(_hash_sim)?: zero variance",
+        None),
     "moran_local_permuted": (
         lambda v, e: moran_local(v, e, permutations=PERMS, seed=7),
-        "moran_local", "moran_local: zero variance"),
+        "moran_local", "moran_local: zero variance", None),
     "moran_local": (
         lambda v, e: moran_local(v, e),
-        None, "moran_local: zero variance"),
+        None, "moran_local: zero variance", None),
+    "getis_gstar": (
+        lambda v, e: getis_gstar(v, e),
+        None, "getis_gstar: zero variance",
+        "getis_gstar: values sum to zero"),
 }
 
 RING = [(i, 1 + (i + d - 1) % 6) for i in range(1, 7) for d in (1, 5)]
@@ -49,6 +57,7 @@ CASES = {
     "null_high_degree_source": (
         {**{i: float((i * 41) % 7) for i in range(1, 7)}, 7: None},
         RING + [(7, j) for j in range(1, 7)]),
+    "zero_sum": ({1: -3.0, 2: 1.0, 3: 2.0, 4: -1.0, 5: 4.0, 6: -3.0}, RING),
 }
 
 
@@ -66,7 +75,7 @@ def _frames(spark, vals, pairs):
 @pytest.mark.parametrize("case", list(CASES))
 @pytest.mark.parametrize("entry", list(ENTRIES))
 def test_degenerate_inputs(spark, entry, case):
-    call, op, zero_var = ENTRIES[entry]
+    call, op, zero_var, zero_sum = ENTRIES[entry]
     vals, pairs = CASES[case]
     values, edges = _frames(spark, vals, pairs)
     valued = {i for i, v in vals.items() if v is not None}
@@ -79,8 +88,9 @@ def test_degenerate_inputs(spark, entry, case):
                     ValueError, match=f"^{op}: no rows with a non-null value"):
                 call(values, edges).collect()
         return
-    if case == "zero_variance":
-        with pytest.raises(Exception, match=zero_var):
+    named = {"zero_variance": zero_var, "zero_sum": zero_sum}.get(case)
+    if named:
+        with pytest.raises(Exception, match=named):
             call(values, edges).collect()
         return
 
@@ -90,10 +100,11 @@ def test_degenerate_inputs(spark, entry, case):
     for r in rows:
         d = r.asDict()
         assert d.get("local_i", 0.0) is not None
+        assert d.get("z_score", 0.0) is not None
         if op is not None:
             p = d.get("p_sim", d.get("significance"))
             assert 0.0 < p <= 1.0
-    if op is None:
+    if entry == "moran_local":
         hot = {r["id"] for r in moran_hotspots(call(values, edges))
                .collect()}
         assert hot <= valued

@@ -184,25 +184,49 @@ def _leaf_rdd_ids(df):
 
 
 def test_loop_operators_soak(spark):
-    """Five calls of each loop operator in one session: every call leaves
-    exactly its output's own checkpoints persisted (released here before
-    the next call), and the job count per call stays flat.  AQE submits
-    query stages as jobs of their own, how many depends on stage timing,
-    so dedup_components' count moves within a band of 3 on unchanged
-    code (49-52 over calls); growth beyond that band fails."""
+    """Five calls of each loop operator, and of each operator built on
+    dedup_components, in one session: every call leaves exactly its
+    output's own checkpoints persisted (released here before the next
+    call), and the job count per call stays flat.  AQE submits query
+    stages as jobs of their own, how many depends on stage timing, so
+    dedup_components' count moves within a band of 3 on unchanged code
+    (49-52 over calls); growth beyond that band fails."""
     from crankshaft_spark.operators._fixpoint import _release_rdds
-    from crankshaft_spark.operators.dedup import dedup_components
+    from crankshaft_spark.operators.ann import embedding_near_dedup
+    from crankshaft_spark.operators.dbscan import dbscan
+    from crankshaft_spark.operators.dedup import dedup_components, near_dedup
     from crankshaft_spark.operators.graph import hits_fp
+    from crankshaft_spark.operators.multimodal import (
+        audio_near_dedup, media_near_dedup, synth_media)
 
     edges = spark.createDataFrame(EDGES, "src long, dst long, w long")
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 39) if i % 10 != 9], "a long, b long")
+    texts = spark.createDataFrame(
+        [(i, f"near duplicate document number {i // 2} for the soak")
+         for i in range(12)], "doc_id long, text string")
+    emb = spark.createDataFrame(
+        [(i, [1.0 + (i % 3) * 1e-4, float(i // 3), 0.5, -0.25])
+         for i in range(12)], "vec_id long, embedding array<double>")
+    media = synth_media(spark, n=24, seed=42)
+    pts = spark.createDataFrame(
+        [(i, float(i % 4), float(i // 4 * 3)) for i in range(16)],
+        "id long, x double, y double")
     calls = {
         "dedup_components": (lambda: dedup_components(docs, pairs), 1),
         "pagerank_fp": (lambda: pagerank_fp(edges, iters=3), 1),
         "hits_fp": (lambda: hits_fp(edges, iters=3), 3),
+        "near_dedup": (lambda: near_dedup(texts, threshold=0.9), 1),
+        "embedding_near_dedup": (lambda: embedding_near_dedup(
+            emb, dims=4, n_planes=4, threshold=0.999), 1),
+        "media_near_dedup": (lambda: media_near_dedup(media), 1),
+        "audio_near_dedup": (lambda: audio_near_dedup(media), 1),
+        "dbscan": (lambda: dbscan(pts, eps=1.0, min_pts=3), 1),
     }
+    # the near-dedup outputs also read their input frames
+    inputs = set().union(*map(_leaf_rdd_ids, (
+        edges, docs, pairs, texts, emb, media, pts)))
     for name, (call, n_held) in calls.items():
         jobs = []
         for _ in range(5):
@@ -211,7 +235,8 @@ def test_loop_operators_soak(spark):
             assert out.collect()
             jobs.append(_jobs_started(spark) - j0)
             held = _persistent(spark) - before
-            assert held == _leaf_rdd_ids(out) and len(held) == n_held, name
+            assert held == _leaf_rdd_ids(out) - inputs, name
+            assert len(held) == n_held, name
             _release_rdds(spark.sparkContext, held)
         assert abs(jobs[-1] - jobs[1]) <= 3, (name, jobs)
 
