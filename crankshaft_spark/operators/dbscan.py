@@ -10,9 +10,9 @@ Clusters"), composed entirely from machinery the engine already
 gates:
 
   1. eps-neighbor edges from ONE ring-1 equi-join on the cellv1 grid
-     at cell_size = eps (any pair within eps shares a 3x3 cell block;
-     the right point lives in exactly one cell, so no pair appears
-     twice and no dedup shuffle is needed);
+     at cell_size = eps (knn._candidate_pairs: any pair within eps
+     shares a 3x3 cell block; the right point lives in exactly one cell,
+     so no pair appears twice and no dedup shuffle is needed);
   2. |N_eps(p)| (self included, per the paper) from a map-side-
      combinable count; core points are n_eps >= min_pts;
   3. clusters = connected components of the core-core eps-graph via
@@ -41,43 +41,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from crankshaft_spark.functions.cells import (
-    CELL_M, cell_expr, cell_sql, ring_cells_expr)
-from crankshaft_spark.functions.distance import (
-    planar_dist2, planar_dist2_sql)
+from crankshaft_spark.functions.cells import CELL_M, cell_sql
+from crankshaft_spark.functions.distance import planar_dist2_sql
 from crankshaft_spark.operators._fixpoint import _Scope
 from crankshaft_spark.operators.dedup import dedup_components, reach_ctes
+from crankshaft_spark.operators.knn import _radius_pairs
 
 __all__ = ["dbscan", "dbscan_oracle_sql"]
-
-
-def _eps_edges(pts: DataFrame, eps: float) -> DataFrame:
-    """(id, nid) directed eps-neighbor pairs, id <> nid, both directions.
-
-    Ring-1 block join on the eps-sized cellv1 grid: the left side
-    explodes each point to its 3x3 cell block, the right side keeps
-    each point in its single home cell, and the equi-join on the cell
-    key yields every candidate exactly once.  dist^2 <= eps^2 (the
-    paper's closed ball) refines — exact arithmetic whenever the
-    coordinates are integer-valued doubles, which the catalog inputs
-    pin so the DuckDB oracle matches bit-for-bit.
-    """
-    cell = cell_expr(F.col("x"), F.col("y"), eps)
-    left = pts.select(
-        "id", "x", "y",
-        F.explode(ring_cells_expr(cell, 1)).alias("cell"),
-    )
-    right = pts.select(
-        F.col("id").alias("nid"), F.col("x").alias("nx"),
-        F.col("y").alias("ny"), cell.alias("cell"),
-    )
-    d2 = planar_dist2(F.col("x"), F.col("y"), F.col("nx"), F.col("ny"))
-    return (
-        left.join(right, "cell")
-        .where((F.col("id") != F.col("nid"))
-               & (d2 <= F.lit(float(eps) * float(eps))))
-        .select("id", "nid")
-    )
 
 
 def dbscan(
@@ -101,9 +71,15 @@ def dbscan(
         F.col(x).alias("x"), F.col(y).alias("y"),
     )
     with _Scope(df.sparkSession) as scope:
-        # three consumers (counts, core pairs, border join): a lazy cut
-        # is filled by the first job that reads it, so it costs no job
-        edges = scope.cut(_eps_edges(pts, eps), eager=False)
+        # (id, nbr) eps-neighbour pairs, both directions: the ring-1 block
+        # at cell_size = eps, closed ball d² <= eps² (exact on the
+        # integer-valued coordinates the oracle pins).  Three consumers
+        # (counts, core pairs, border join): a lazy cut is filled by the
+        # first job that reads it, so it costs no job
+        edges = scope.cut(
+            _radius_pairs(pts, pts, eps, eps, exclude_self=True)
+            .where(F.col("d2") <= F.lit(float(eps) * float(eps)))
+            .select("id", "nbr"), eager=False)
         ncnt = edges.groupBy("id").agg(F.count("*").alias("n_nbrs"))
         stats = (
             pts.join(ncnt, "id", "left")
@@ -114,10 +90,10 @@ def dbscan(
         cores = stats.where(F.col("n_eps") >= F.lit(int(min_pts))) \
                      .select("id")
         core_pairs = (
-            edges.where(F.col("id") < F.col("nid"))
+            edges.where(F.col("id") < F.col("nbr"))
             .join(cores, "id")
-            .join(cores.select(F.col("id").alias("nid")), "nid")
-            .select(F.col("id").alias("a"), F.col("nid").alias("b"))
+            .join(cores.select(F.col("id").alias("nbr")), "nbr")
+            .select(F.col("id").alias("a"), F.col("nbr").alias("b"))
         )
         comp = scope.own(dedup_components(
             cores.select(F.col("id").alias("doc_id")), core_pairs,
@@ -128,8 +104,8 @@ def dbscan(
         # neighbor's component (pinned tie-break; the paper leaves this
         # scan-order-dependent when a border point touches two clusters)
         border = (
-            edges.join(comp.select(F.col("id").alias("nid"),
-                                   F.col("cluster").alias("ncl")), "nid")
+            edges.join(comp.select(F.col("id").alias("nbr"),
+                                   F.col("cluster").alias("ncl")), "nbr")
             .join(cores, "id", "left_anti")
             .groupBy("id").agg(F.min("ncl").alias("cluster"))
         )

@@ -101,22 +101,21 @@ def getis_gstar(
     pure aggregates + join algebra, no Python, no collect.
     p_value is the two-sided normal tail (erfc-based, JVM-side).
     NULL-valued rows are dropped; zero variance and a zero value sum
-    raise errors naming the operator.
+    raise errors naming the operator.  A row whose Var[G*_i] is 0 — its
+    other n−1 values all equal, or deg = n−1 so every draw is the same
+    set — has a NULL z_score and p_value.
     """
     g = _gs(values, edges, value_col)
     m_i = (F.col("_ysum") - F.col("_y")) / (F.col("_n") - 1)
     var_i = (F.col("_y2sum") - F.col("_y") * F.col("_y")) / (F.col("_n") - 1) - m_i * m_i
     denom = (F.col("deg") + 1) * F.col("_ysum")
     eg = (F.col("deg") * m_i + F.col("_y")) / denom
-    vg = (
-        F.col("deg")
-        * var_i
-        * (F.col("_n") - 1 - F.col("deg"))
-        / (F.col("_n") - 2)
-    ) / (denom * denom)
-    out = g.withColumn("z_score", (F.col("gs") - eg) / F.sqrt(vg)).withColumn(
-        "p_value", normal_tail(F.abs(F.col("z_score")))
-    )
+    vnum = F.col("deg") * var_i * (F.col("_n") - 1 - F.col("deg"))
+    vg = (vnum / (F.col("_n") - 2)) / (denom * denom)
+    # Var[G*_i] = 0 (the other values all equal, or deg = n−1): no z
+    out = g.withColumn(
+        "z_score", F.when(vnum > 0, (F.col("gs") - eg) / F.sqrt(vg))
+    ).withColumn("p_value", normal_tail(F.abs(F.col("z_score"))))
     return out.select("id", "gs", "z_score", "p_value")
 
 

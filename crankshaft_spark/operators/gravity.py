@@ -5,20 +5,18 @@ source, candidate targets within ``radius`` (ST_DWithin, :84-91), then
 distance-decay share h = 100·(w/d)/Σ_targets(w/d) and hpop = pop·h/100
 (denominator per source, :93-100).
 
-Distributed form: the radius join is a cellv1 candidate equi-join (ring
-sized to ceil(radius/cell_size)) + exact distance filter; the denominator is
-one groupBy over the pair table — no per-row subqueries.
+Distributed form: the radius join is the shared cellv1 candidate kernel
+(knn._radius_pairs: ring ceil(radius/cell_size), capped) + exact distance
+filter; the denominator is one groupBy over the pair table — no per-row
+subqueries.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crankshaft_spark.functions.cells import cell_expr, ring_cells_expr
-from crankshaft_spark.functions.distance import planar_dist2
+from crankshaft_spark.operators.knn import _radius_pairs
 
 
 def gravity_huff(
@@ -33,33 +31,28 @@ def gravity_huff(
 ) -> DataFrame:
     """sources: (id, x, y, pop); targets: (id, x, y, weight).
 
-    Returns (source_id, target_id, dist, h, hpop) for all pairs within
-    ``radius`` (planar units).  Targets with weight <= ``minval`` are
-    excluded before the join (the reference's ``WHERE tw > minval``,
-    07_gravity.sql:89; default excludes nothing).
+    Returns (source_id, target_id, dist, h, hpop) for all pairs with
+    0 < dist <= ``radius`` (planar units).  Targets with weight <=
+    ``minval`` are excluded before the join (the reference's ``WHERE tw >
+    minval``, 07_gravity.sql:89; default excludes nothing).  ``cell_size``
+    (default ``radius``) is the candidate grid; ``radius`` and
+    ``cell_size`` must be > 0.
     """
-    cs = cell_size or radius
-    ring = max(1, math.ceil(radius / cs))
+    if not radius > 0:
+        raise ValueError(f"gravity_huff: radius must be > 0, got {radius}")
+    if cell_size is not None and not cell_size > 0:
+        raise ValueError(
+            f"gravity_huff: cell_size must be > 0, got {cell_size}")
     src = sources.select(
-        F.col("id").alias("source_id"), "x", "y", F.col(pop_col).alias("pop")
-    ).withColumn("cell", cell_expr(F.col("x"), F.col("y"), cs))
+        F.col("id").alias("source_id"), "x", "y", F.col(pop_col).alias("pop"))
     tgt = targets.where(F.col(weight_col) > F.lit(minval)).select(
-        F.col("id").alias("target_id"),
-        F.col("x").alias("tx"),
-        F.col("y").alias("ty"),
-        F.col(weight_col).alias("w"),
-    ).withColumn("cell", cell_expr(F.col("tx"), F.col("ty"), cs))
-
+        F.col("id").alias("target_id"), "x", "y", F.col(weight_col).alias("w"))
     pairs = (
-        src.select(
-            "source_id", "x", "y", "pop",
-            F.explode(ring_cells_expr(F.col("cell"), ring)).alias("cell"),
-        )
-        .join(tgt, "cell")
-        .withColumn(
-            "dist",
-            F.sqrt(planar_dist2(F.col("x"), F.col("y"), F.col("tx"), F.col("ty"))),
-        )
+        _radius_pairs(src, tgt, radius,
+                      radius if cell_size is None else cell_size,
+                      left_cols=("source_id", "pop"),
+                      right_cols=("target_id", "w"))
+        .withColumn("dist", F.sqrt("d2"))
         .where((F.col("dist") <= F.lit(radius)) & (F.col("dist") > 0))
     )
     denom = pairs.groupBy("source_id").agg(

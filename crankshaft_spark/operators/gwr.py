@@ -40,7 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crankshaft_spark.operators.knn import knn_join
+from crankshaft_spark.functions.cells import cell_expr
+from crankshaft_spark.operators.knn import (
+    _candidate_pairs, _radius_pairs, knn_join)
 
 EPS = 1.0000001
 
@@ -150,112 +152,10 @@ def _dense_edges(cal: DataFrame, data: DataFrame) -> DataFrame:
     )
 
 
-def _radius_edges(cal: DataFrame, data: DataFrame, radius: float,
-                  cell_size: float) -> DataFrame:
-    """(id, nbr, d) pairs with d < radius — cell-ring candidate join
-    (filter-and-refine), the fixed-bisquare compact support."""
-    import math
-
-    from crankshaft_spark.functions.cells import cell_expr, ring_cells_expr
-
-    ring = max(1, int(math.ceil(radius / cell_size)))
-    if ring > 48:
-        # grid far finer than the bandwidth: candidate fanout (2r+1)^2 would
-        # dominate — coarsen the join grid so ring stays bounded (the join
-        # is still exact: the d < radius refine is unchanged)
-        cell_size = radius / 32.0
-        ring = 32
-    lhs = cal.select(
-        "id", "x", "y",
-        F.explode(
-            ring_cells_expr(cell_expr(F.col("x"), F.col("y"), cell_size), ring)
-        ).alias("cell"),
-    )
-    rhs = data.select(
-        F.col("id").alias("nbr"), F.col("x").alias("nx"), F.col("y").alias("ny"),
-        cell_expr(F.col("x"), F.col("y"), cell_size).alias("cell"),
-    )
-    return (
-        lhs.join(rhs, "cell")
-        .select(
-            "id", "nbr",
-            F.sqrt(
-                (F.col("x") - F.col("nx")) * (F.col("x") - F.col("nx"))
-                + (F.col("y") - F.col("ny")) * (F.col("y") - F.col("ny"))
-            ).alias("d"),
-        )
-        .where(F.col("d") < radius)
-    )
-
-
 #: per-row ring cap for the variable-radius join — above it a row moves to
-#: a coarser (doubled) grid tier, mirroring _radius_edges' coarsen guard.
+#: a coarser (doubled) grid tier.  A per-row Column ring builds no literal
+#: offset array, so this cap sits above knn._RING_CAP.
 VAR_RING_CAP = 32
-
-
-def _var_radius_edges(cal_h: DataFrame, data: DataFrame, zcut: float,
-                      cell_size: float) -> DataFrame:
-    """(id, nbr, d, _h) pairs with d < zcut·h_i — PER-POINT radius join for
-    adaptive non-truncated kernels at scale.
-
-    Each calibration point explodes only the cell ring its own radius
-    needs (ring_i = ceil(zcut·h_i / size), so ring_i·size ≥ zcut·h_i
-    guarantees no in-radius point is missed); dense regions have small h_i
-    and tiny fanout, sparse regions large rings — the fanout tracks the
-    data, not the global worst case.
-
-    Ring cap: a row whose fine-grid ring would exceed VAR_RING_CAP is
-    assigned to grid tier t = ⌈log2(ring/CAP)⌉ (cell size · 2^t), so every
-    row's explode is ≤ (2·CAP+1)² cells — an isolated outlier whose h_i
-    spans the domain gets a coarse grid, never a multi-million-cell
-    explode.  One equi-join per OCCUPIED tier (≤ log2 of the radius spread,
-    found with a cheap distinct on the k-row-per-point h table); the
-    d < zcut·h_i refine is unchanged, so the result is exact."""
-    from crankshaft_spark.functions.cells import cell_expr, ring_cells_expr
-
-    ncell = F.greatest(
-        F.lit(1), F.ceil(F.lit(zcut) * F.col("_h") / F.lit(cell_size))
-    ).cast("double")
-    tier = F.greatest(
-        F.lit(0), F.ceil(F.log2(ncell / F.lit(float(VAR_RING_CAP))))
-    ).cast("int")
-    cal_t = cal_h.withColumn("_tier", tier)
-    tiers = sorted(
-        r[0] for r in cal_t.select("_tier").distinct().collect()
-    )
-    parts = []
-    for tv in tiers:
-        size_t = cell_size * (2 ** tv)
-        cell = cell_expr(F.col("x"), F.col("y"), size_t)
-        ring = F.greatest(
-            F.lit(1),
-            F.ceil(F.lit(zcut) * F.col("_h") / F.lit(size_t)),
-        ).cast("long")
-        lhs = (
-            cal_t.where(F.col("_tier") == tv)
-            .select("id", "x", "y", "_h",
-                    F.explode(ring_cells_expr(cell, ring)).alias("cell"))
-        )
-        rhs = data.select(
-            F.col("id").alias("nbr"), F.col("x").alias("nx"),
-            F.col("y").alias("ny"),
-            cell_expr(F.col("x"), F.col("y"), size_t).alias("cell"),
-        )
-        parts.append(
-            lhs.join(rhs, "cell")
-            .select(
-                "id", "nbr", "_h",
-                F.sqrt(
-                    (F.col("x") - F.col("nx")) * (F.col("x") - F.col("nx"))
-                    + (F.col("y") - F.col("ny")) * (F.col("y") - F.col("ny"))
-                ).alias("d"),
-            )
-            .where(F.col("d") < F.lit(zcut) * F.col("_h"))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def _weighted_edges(cal: DataFrame, data: DataFrame, bw: float,
@@ -284,15 +184,17 @@ def _weighted_edges(cal: DataFrame, data: DataFrame, bw: float,
         dense_ok = data.limit(DENSE_CAP + 1).count() <= DENSE_CAP
     if fixed:
         h = F.lit(float(bw))
-        if truncated:
-            edges = _radius_edges(cal, data, float(bw), cell_size)
-        elif dense_ok:
+        if dense_ok:
             edges = _dense_edges(cal, data)
         else:
-            # scale path: truncate the infinite-support kernel at the
-            # TRUNC_TOL weight contour — a fixed-radius cell join
-            edges = _radius_edges(cal, data, CUTOFF_Z[kernel] * float(bw),
-                                  cell_size)
+            # compact support (d < h), or the scale path: the infinite-
+            # support kernel truncated at the TRUNC_TOL weight contour
+            radius = (float(bw) if truncated
+                      else CUTOFF_Z[kernel] * float(bw))
+            edges = (
+                _radius_pairs(cal, data, radius, cell_size)
+                .select("id", "nbr", F.sqrt("d2").alias("d"))
+                .where(F.col("d") < radius))
         return edges.withColumn("w", _kernel_w(kernel, F.col("d"), h)).select(
             "id", "nbr", "d", "w"
         )
@@ -321,15 +223,41 @@ def _weighted_edges(cal: DataFrame, data: DataFrame, bw: float,
     else:
         # adaptive non-truncated at scale: exact h_i from the bounded kNN
         # join, then a PER-POINT radius join truncated at the TRUNC_TOL
-        # weight contour (d < zcut·h_i)
+        # weight contour (d < reach_i = zcut·h_i).  Each point explodes
+        # only the ring its own reach needs (ceil(reach_i/size) cells), so
+        # the fanout tracks local density.  A row whose fine-grid ring
+        # would pass VAR_RING_CAP moves to grid tier
+        # t = ceil(log2(ring/CAP)) (cell size·2^t), so no row explodes
+        # more than (2·CAP+1)² cells — an outlier whose h_i spans the
+        # domain gets a coarse grid.  One kernel join per OCCUPIED tier.
         knn = knn_join(
             cal, data, k=bw, cell_size=cell_size,
             domain_span=float("inf"), persist_registry=persist_registry,
         )
         h = knn.groupBy("id").agg((F.max(F.sqrt("d2")) * EPS).alias("_h"))
-        edges = _var_radius_edges(
-            cal.join(h, "id"), data, CUTOFF_Z[kernel], cell_size
-        ).select("id", "nbr", "d")
+        reach = F.lit(CUTOFF_Z[kernel]) * F.col("_h")
+
+        def ring(size):
+            return F.greatest(F.lit(1), F.ceil(reach / F.lit(size)))
+
+        cal_t = cal.join(h, "id").withColumn("_tier", F.greatest(
+            F.lit(0),
+            F.ceil(F.log2(ring(cell_size).cast("double")
+                          / F.lit(float(VAR_RING_CAP))))).cast("int"))
+        edges = None
+        for tv in sorted(r[0] for r in
+                         cal_t.select("_tier").distinct().collect()):
+            size = cell_size * (2 ** tv)
+            key = cell_expr(F.col("x"), F.col("y"), size)
+            part = (
+                _candidate_pairs(
+                    cal_t.where(F.col("_tier") == tv).withColumn("cell", key),
+                    data.withColumn("cell", key), ring(size).cast("long"),
+                    left_cols=("id", "_h"))
+                .select("id", "nbr", "_h", F.sqrt("d2").alias("d"))
+                .where(F.col("d") < reach)
+                .select("id", "nbr", "d"))
+            edges = part if edges is None else edges.unionByName(part)
     return (
         edges.join(h, "id")
         .withColumn("w", _kernel_w(kernel, F.col("d"), F.col("_h")))

@@ -28,9 +28,22 @@ identical to the O(n²) oracle SQL used by the correctness harness.  The
 cell scheme is a performance knob, never a correctness knob: both grids
 return the identical exact edge list (tests/test_knn.py parametrizes the
 brute-force comparison over both).
+
+``_candidate_pairs`` is the package's one point-pair cell join (ring
+explode → equi-join on the cell key → exact d²).  Its callers: the kNN
+loop, ``within_distance``, ``dbscan``'s eps edges, ``ripley_k``'s pair
+counts (extra group key), ``gravity_huff``'s source→target pairs
+(payload columns) and GWR's fixed-radius and per-point-radius kernel
+supports (per-row ``Column`` ring).  Each caller keeps its own refine
+predicate.  Radius callers go through ``_radius_pairs``, the one place
+that turns (radius, cell size) into a grid and a constant ring; the ring
+is capped at ``_RING_CAP``, below the size where the literal offset
+array breaks whole-stage codegen.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,34 +77,63 @@ def _ring_guarantee2(ring: int, cell_size: float, grid: str) -> float:
     return float(g) ** 2
 
 
+#: largest constant ring a radius join explodes to.  A constant ring is a
+#: literal array of (2r+1)² cell offsets inside generated code.  Measured
+#: on gravity_huff (200 sources, 50 targets, radius 30; local[3] on a
+#: 4-vCPU host, mean of 2 warm calls): ring 3 1.1 s, ring 8 2.1 s, ring 12
+#: 3.7 s, ring 14 5.1 s; from ring 16 on Spark logs "Code grows beyond
+#: 64 KB" and falls back to interpreted evaluation (ring 20 7.1 s).  At
+#: ring r the candidate disc costs ((2r+1)/r)² radius² of area, only 4 %
+#: more at ring 8 than at ring 12, so a finer grid is coarsened to ring 8.
+_RING_CAP = 8
+
+#: right-side names in a candidate pair (the left side keeps its own).
+_NBR = {"id": "nbr", "x": "nx", "y": "ny"}
+
+
 def _candidate_pairs(
-    left: DataFrame, pts: DataFrame, ring: int, exclude_self: bool,
-    grid: str = "rect",
+    left: DataFrame, pts: DataFrame, ring, exclude_self: bool = False,
+    grid: str = "rect", *, on=(), left_cols=("id",), right_cols=("id",),
 ) -> DataFrame:
-    """(id, nbr, d2) candidate pairs: `left` exploded to its ring-`ring`
-    cell block (rect) or hex k-ring, equi-joined to `pts` keyed by home
-    cell, exact planar d² attached.  The ONE cell-join candidate kernel
-    shared by the kNN loop and within_distance (the shared-builder rule —
-    a tuned join shape must not diverge between the two)."""
+    """(*left_cols, *right_cols, *on, d2) candidate pairs: `left` exploded
+    to its ring-`ring` cell block (rect) or hex k-ring, equi-joined to
+    `pts` on its home cell plus the extra keys `on`, exact planar d²
+    attached.  Both sides carry (x, y, cell); a right-side ``id`` comes
+    out as ``nbr``.  `ring` is an int or, on the rect grid, a per-row
+    Column over `left`'s columns.  The ONE cell-join candidate kernel
+    (module docstring lists its callers): a tuned join shape must not
+    diverge between them, and each caller applies its own refine."""
     ring_arr = (hex_ring_expr(F.col("cell"), ring) if grid == "hex"
                 else ring_cells_expr(F.col("cell"), ring))
     lhs = left.select(
-        "id", "x", "y",
+        *left_cols, *on, "x", "y",
         F.explode(ring_arr).alias("cell"),
     )
     rhs = pts.select(
-        F.col("id").alias("nbr"),
-        F.col("x").alias("nx"),
-        F.col("y").alias("ny"),
-        "cell",
+        *[F.col(c).alias(_NBR.get(c, c)) for c in (*right_cols, "x", "y")],
+        *on, "cell",
     )
-    cand = lhs.join(rhs, "cell")
+    cand = lhs.join(rhs, ["cell", *on])
     if exclude_self:
         cand = cand.where(F.col("id") != F.col("nbr"))
     return cand.select(
-        "id", "nbr",
+        *left_cols, *[_NBR.get(c, c) for c in right_cols], *on,
         planar_dist2(F.col("x"), F.col("y"), F.col("nx"), F.col("ny")).alias("d2"),
     )
+
+
+def _radius_pairs(left: DataFrame, pts: DataFrame, radius: float,
+                  cell_size: float, **kw) -> DataFrame:
+    """Kernel candidates holding every pair within ``radius``: both sides
+    keyed on a ``cell_size`` grid, ring ceil(radius/cell_size), or — when
+    that ring passes _RING_CAP — on the coarser radius/_RING_CAP grid at
+    the cap.  ring·size covers the radius either way; the caller refines."""
+    ring = max(1, math.ceil(radius / cell_size))
+    if ring > _RING_CAP:
+        cell_size, ring = radius / _RING_CAP, _RING_CAP
+    key = cell_expr(F.col("x"), F.col("y"), cell_size)
+    return _candidate_pairs(left.withColumn("cell", key),
+                            pts.withColumn("cell", key), ring, **kw)
 
 
 def _topk_for(

@@ -14,10 +14,10 @@ Estimator (naive, no edge correction — documented):
 Under CSR K̂(d) ≈ πd²; clustering reads above, inhibition below.
 
 Scale shape: ONE cell-ring candidate join at cell_size = max(radii)
-(ring-1 3×3 block ⊇ every pair within max d — the kNN join guarantee,
-functions/cells.py), then conditional integer counts for ALL radii from
-that single candidate set — never an all-pairs product; groups are the
-data-parallel axis.  Counts are exact integers (integer coordinates →
+(the shared knn._candidate_pairs kernel, keyed on (cell, group): the
+ring-1 3×3 block ⊇ every pair within max d), then conditional integer
+counts for ALL radii from that single candidate set — never an
+all-pairs product; groups are the data-parallel axis.  Counts are exact integers (integer coordinates →
 integer d²), so the whole statistic is oracle-exact; the only float is
 the final A·cnt/(n(n−1)) ratio in one pinned operand order.
 """
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crankshaft_spark.functions.cells import CELL_M, ring_cells_expr
+from crankshaft_spark.operators.knn import _radius_pairs
 
 
 def ripley_k(
@@ -49,25 +49,15 @@ def ripley_k(
     if not rads or rads[0] <= 0:
         raise ValueError(f"ripley_k: radii must be positive, got {radii}")
     maxd = float(rads[-1])
-    xi = F.col(x).cast("long")
-    yi = F.col(y).cast("long")
     base = points.select(
-        F.col(group_col).alias("_g"), xi.alias("_x"), yi.alias("_y"),
-        ((F.floor(F.col(x) / F.lit(maxd)).cast("long") * F.lit(CELL_M))
-         + F.floor(F.col(y) / F.lit(maxd)).cast("long")).alias("_cell"))
-    left = base.withColumn(
-        "_ncell", F.explode(ring_cells_expr(F.col("_cell"), 1)))
-    right = base.select(
-        F.col("_g"), F.col("_x").alias("_x2"), F.col("_y").alias("_y2"),
-        F.col("_cell").alias("_ncell"))
-    d2 = ((F.col("_x") - F.col("_x2")) * (F.col("_x") - F.col("_x2"))
-          + (F.col("_y") - F.col("_y2")) * (F.col("_y") - F.col("_y2")))
-    pairs = (
-        left.join(right, ["_g", "_ncell"])
-        .where((F.col("_x") != F.col("_x2")) | (F.col("_y") != F.col("_y2")))
-        .select("_g", d2.alias("_d2")))
+        F.col(group_col).alias("_g"),
+        F.col(x).cast("long").alias("x"), F.col(y).cast("long").alias("y"))
+    # long coordinates: d² is an exact integer, and d² > 0 is the
+    # self-exclusion (coincident points are not pairs)
+    pairs = _radius_pairs(base, base, maxd, maxd, on=("_g",), left_cols=(),
+                          right_cols=()).where(F.col("d2") > 0)
     cnts = pairs.groupBy("_g").agg(*[
-        F.sum(F.when(F.col("_d2") <= r * r, 1).otherwise(0))
+        F.sum(F.when(F.col("d2") <= r * r, 1).otherwise(0))
         .alias(f"_c{i}")
         for i, r in enumerate(rads)])
     n_t = base.groupBy("_g").agg(F.count(F.lit(1)).alias("_n"))

@@ -203,8 +203,9 @@ def test_gwr_r_squared_stable_under_large_mean_offset(spark, georgia):
 
 
 @pytest.mark.parametrize("fixed,kernel,bw", [
-    # one combo per truncation code path: fixed -> _radius_edges,
-    # adaptive -> _var_radius_edges; the kernel choice only swaps the
+    # one combo per truncation code path: fixed -> the constant-ring
+    # radius join, adaptive -> the tiered per-row-ring join (both on
+    # knn._candidate_pairs); the kernel choice only swaps the
     # weight formula and CUTOFF_Z constant, so 2 combos cover the matrix
     # (each GWR fit is ~2 min — keep the suite fast)
     (True, "gaussian", 120000.0),

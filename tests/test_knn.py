@@ -114,3 +114,72 @@ def test_within_distance_guards(spark, points):
         within_distance(df, 0.0)
     with pytest.raises(ValueError, match="ring-1"):
         within_distance(df, 6.0, cell_size=3.0)
+
+
+def _kernel_points():
+    # integer-valued points (exact d²), three groups, coincident pairs
+    pts = [(i, float((i * 37) % 60 - 30), float((i * 53) % 40 - 20),
+            (i // 10) % 3)
+           for i in range(150)]
+    pts += [(200 + i, x, y, g) for i, x, y, g in pts[:6]]
+    return pts
+
+
+KERNEL_CASES = {
+    # name: (constant radius or None for the per-row radius, cell_size,
+    #        extra equi-join key)
+    "constant_ring": (6.0, 3.0, ()),       # ring 2
+    "capped_ring": (30.0, 1.0, ()),        # ring 30 -> coarsened to the cap
+    # per-row radius 5 (ring 5) and 40 (ring 40, above GWR's VAR_RING_CAP:
+    # the rows of two tiers in one Column-ring join)
+    "column_ring": (None, 1.0, ()),
+    "extra_key": (6.0, 3.0, ("g",)),
+}
+
+
+@pytest.mark.parametrize("case", list(KERNEL_CASES))
+def test_candidate_kernel_matches_bruteforce(spark, case):
+    """The shared cell-join kernel, refined by each caller's predicate,
+    finds exactly the brute-force pairs — constant, capped and per-row
+    rings, and an extra equi-join key."""
+    import numpy as np
+
+    from crankshaft_spark.functions.cells import cell_expr
+    from crankshaft_spark.operators.knn import (
+        _RING_CAP, _candidate_pairs, _radius_pairs)
+
+    radius, cell_size, on = KERNEL_CASES[case]
+    pts = _kernel_points()
+    rad = np.array([radius if radius is not None
+                    else (40.0 if i % 30 == 0 else 5.0) for i, *_ in pts])
+    df = spark.createDataFrame(
+        [(*p, float(r)) for p, r in zip(pts, rad)],
+        "id long, x double, y double, g long, r double")
+    if radius is None:
+        keyed = df.withColumn("cell", cell_expr(F.col("x"), F.col("y"),
+                                                cell_size))
+        ring = F.greatest(F.lit(1), F.ceil(F.col("r") / F.lit(cell_size)))
+        pairs = _candidate_pairs(keyed, keyed, ring, True,
+                                 left_cols=("id", "r"))
+    else:
+        if case == "capped_ring":
+            assert radius / cell_size > _RING_CAP
+        pairs = _radius_pairs(df, df, radius, cell_size, exclude_self=True,
+                              on=on)
+    got = sorted(
+        (r["id"], r["nbr"], r["d2"]) for r in
+        pairs.where(F.col("d2") <= F.col("r") * F.col("r")
+                    if radius is None else F.col("d2") <= radius * radius)
+        .collect())
+
+    ids = np.array([p[0] for p in pts])
+    xy = np.array([(p[1], p[2]) for p in pts])
+    grp = np.array([p[3] for p in pts])
+    d2 = ((xy[:, None, :] - xy[None, :, :]) ** 2).sum(-1)
+    ok = (d2 <= (rad ** 2)[:, None]) & (ids[:, None] != ids[None, :])
+    if on:
+        ok &= grp[:, None] == grp[None, :]
+    want = sorted((int(ids[i]), int(ids[j]), float(d2[i, j]))
+                  for i, j in zip(*np.nonzero(ok)))
+    assert len(want) > len(pts)
+    assert got == want
