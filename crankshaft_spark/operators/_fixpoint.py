@@ -81,12 +81,14 @@ class _Scope:
 def _fixpoint(scope: _Scope, step: Callable[[DataFrame, int], DataFrame],
               state: DataFrame, *, rounds: int, every: int = 1,
               until: Callable[[DataFrame, DataFrame], bool] | None = None,
-              label: str = "") -> DataFrame:
+              label: str = "", trail: list | None = None) -> DataFrame:
     """The last ``state_k = step(state_{k-1}, k)``, k = 1..rounds.  Without
     ``until`` the state is cut eagerly every ``every`` rounds and on the
     last; with ``until(new, prev)`` each round is cut lazily and the test
     is its one action, ending the loop when true (ValueError when the
-    rounds run out).  Each cut releases its predecessor."""
+    rounds run out).  Each cut releases its predecessor, unless a
+    ``trail`` list is given: then every cut is appended to it and lives
+    until the scope exits, for a result that reads every round."""
     held = state
     for k in range(1, rounds + 1):
         new = step(state, k)
@@ -95,7 +97,10 @@ def _fixpoint(scope: _Scope, step: Callable[[DataFrame, int], DataFrame],
             continue
         new = scope.cut(new, eager=until is None)
         done = until is not None and until(new, state)
-        scope.release(held)
+        if trail is None:
+            scope.release(held)
+        else:
+            trail.append(new)
         held = state = new
         if done:
             return state

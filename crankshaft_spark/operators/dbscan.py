@@ -16,16 +16,18 @@ gates:
   2. |N_eps(p)| (self included, per the paper) from a map-side-
      combinable count; core points are n_eps >= min_pts;
   3. clusters = connected components of the core-core eps-graph via
-     dedup_components' hash-min pointer jumping (O(log diameter)
-     rounds, localCheckpoint per round);
+     dedup_components' block-local solve and contraction (each round
+     one edge shuffle and a bounded numpy solve per Arrow batch, so a
+     long core chain costs a few rounds, not one per hop);
   4. border points (non-core with >= 1 core neighbor) join the MIN
      component label among their core neighbors — a pinned tie-break
      where the paper leaves border assignment scan-order-dependent;
      everything else is noise (cluster NULL).
 
-Every stage is a set-based JVM plan (zero Python), so results are
-bit-identical at any parallelism.  Labels are the min core id of the
-component — deterministic and oracle-replayable.
+Every stage but the components' numpy block stage is a set-based JVM
+plan, and that stage solves each block exactly, so results are
+bit-identical at any parallelism and block size.  Labels are the min
+core id of the component — deterministic and oracle-replayable.
 
 Scale notes (100 TB): candidate volume is sum over cells of
 n_cell * n_ring — DBSCAN's intrinsic density term.  Uniformly dense

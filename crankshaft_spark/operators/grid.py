@@ -160,9 +160,11 @@ def kde_grid(
     points-per-disc at ~2^63/scale (9.2e9 at the default) — lower
     ``scale`` for denser corpora.
 
-    Plan shape: one point scan exploded to the exact support ring (a
-    constant array literal — (2R+1)^2 cells), one map-side-combinable
-    groupBy on the cell key.  No joins, no Python.
+    Plan shape: one point scan exploded to the exact support ring
+    ((2R+1)^2 cells, built per row by ring_cells_expr's Column form: a
+    constant array literal of that size outgrew codegen's 64 KB method
+    limit at R = 10 and the driver heap at R = 20), one map-side-
+    combinable groupBy on the cell key.  No joins, no Python.
     """
     if bandwidth <= 0 or cell_size <= 0:
         raise ValueError("kde_grid: bandwidth and cell_size must be > 0")
@@ -171,7 +173,7 @@ def kde_grid(
     cell = cell_expr(F.col(x), F.col(y), cell_size)
     ex = pts.select(
         F.col(x).alias("_x"), F.col(y).alias("_y"),
-        F.explode(ring_cells_expr(cell, ring)).alias("cell"))
+        F.explode(ring_cells_expr(cell, F.lit(ring))).alias("cell"))
     c = F.col("cell")
     # FLOOR-mod decode (((c % M) + M) % M): ring cells of points near the
     # lon=-180 / lat=-90 edge go negative, where plain sign-of-dividend %

@@ -3,6 +3,8 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -402,10 +404,45 @@ def test_dedup_components_on_lsh_pairs(spark, docs):
     assert got[4][0] == got[5][0] == 4
 
 
+def _min_label_union_find(nodes, edges):
+    """{node: min node of its component}, by union-find."""
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)   # the root is the min node
+    return {v: find(v) for v in nodes}
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n):
+    """Cap Arrow batches, so dedup_components' blocks, at ``n`` rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _shuffled_path(n, seed):
+    ids = (np.random.default_rng(seed).permutation(n) * 7 + 11).tolist()
+    return ids, list(zip(ids[:-1], ids[1:]))
+
+
 def test_dedup_components_deep_chain_and_backstop(spark):
-    """Deep chains converge without tuning (pointer jumping: O(log d)
-    rounds); the max_rounds backstop fails loudly instead of returning
-    split groups, and releases every checkpoint the call made."""
+    """A 30-node chain converges without tuning; the max_rounds backstop
+    fails loudly instead of returning split groups, and releases every
+    checkpoint the call made.  The chain fits one block, so it is solved
+    in one round: the backstop is driven by a shuffled-id path forced
+    into 16-edge blocks, which needs several."""
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(29)], "a long, b long")
@@ -414,9 +451,49 @@ def test_dedup_components_deep_chain_and_backstop(spark):
     assert sum(r["is_keep"] for r in got) == 1
     held = spark.sparkContext._jsc.getPersistentRDDs().keySet
     before = set(held())
-    with pytest.raises(ValueError, match="did not converge"):
-        dedup_components(docs, pairs, max_rounds=1)
+    ids, edges = _shuffled_path(200, seed=5)
+    pdocs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    ppairs = spark.createDataFrame(edges, "a long, b long")
+    with _arrow_batch_rows(spark, 16):
+        with pytest.raises(ValueError, match="did not converge"):
+            dedup_components(pdocs, ppairs, max_rounds=1)
     assert set(held()) <= before
+
+
+def test_dedup_components_many_blocks(spark):
+    """Blocks capped at 32 edges, so every graph spans many blocks and
+    rounds: a 1 000-node path with shuffled ids and a random sparse graph
+    (isolated docs, pair-only ids) match union-find, the second also
+    under keep_col."""
+    ids, edges = _shuffled_path(1000, seed=9)
+    rng = np.random.default_rng(17)
+    rand = list(zip(rng.integers(0, 1500, 700).tolist(),
+                    rng.integers(0, 1500, 700).tolist()))
+    rand_docs = list(range(0, 1500, 2))
+    q = {i: float((i * 7) % 10) / 10 for i in rand_docs}
+    with _arrow_batch_rows(spark, 32):
+        got = dedup_components(
+            spark.createDataFrame([(i,) for i in ids[::3]], "doc_id long"),
+            spark.createDataFrame(edges, "a long, b long")).collect()
+        assert len(got) == 1000
+        assert all(r["component"] == min(ids) for r in got)
+        assert sum(r["is_keep"] for r in got) == 1
+        got = {r["doc_id"]: (r["component"], r["n_members"], r["is_keep"])
+               for r in dedup_components(
+                   spark.createDataFrame(list(q.items()),
+                                         "doc_id long, quality double"),
+                   spark.createDataFrame(rand, "a long, b long"),
+                   keep_col="quality").collect()}
+    nodes = set(rand_docs) | {v for e in rand for v in e}
+    comp = _min_label_union_find(nodes, rand)
+    members: dict = {}
+    for v in nodes:
+        members.setdefault(comp[v], []).append(v)
+    want = {}
+    for c, ms in members.items():
+        best = min(ms, key=lambda u: (-q.get(u, float("-inf")), u))
+        want.update({v: (c, len(ms), v == best) for v in ms})
+    assert got == want
 
 
 def test_image_ahash_replay_and_pairs(spark):

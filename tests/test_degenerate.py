@@ -8,12 +8,18 @@ NULL-valued rows (SURVEY §1.1).  Gi* divides by the value sum, so a zero
 sum is an error there; Moran centres its values, so it is valid input.
 The one documented NULL is the analytic Gi* z (and p) of a row whose
 Var[G*_i] is 0.
+
+``dedup_components`` has its own cases (NULL ids and endpoints,
+self-pairs, duplicate pairs, empty sides, pair-only ids), each checked
+against a union-find over the non-NULL input.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
+from crankshaft_spark.operators.dedup import dedup_components
 from crankshaft_spark.operators.getis import getis_gstar, getis_gstar_sim
 from crankshaft_spark.operators.moran import (
     moran_hotspots,
@@ -120,3 +126,54 @@ def test_degenerate_inputs(spark, entry, case):
         hot = {r["id"] for r in moran_hotspots(call(values, edges))
                .collect()}
         assert hot <= valued
+
+
+COMPONENT_CASES = {
+    # name: (docs ids, pairs); None is a NULL
+    "null_endpoint": ([1, 2, 3], [(1, 2), (None, 3), (3, None)]),
+    "null_doc_id": ([1, 2, 3, None], [(1, 2), (None, 3), (3, None)]),
+    "null_pair_only_end": ([1], [(None, 7), (1, 2)]),
+    "self_pair": ([1, 2, 3], [(1, 1), (2, 3), (4, 4)]),
+    "duplicate_pair": ([1, 2, 3], [(1, 2), (1, 2), (2, 1), (3, 2)]),
+    "empty_pairs": ([5, 1, 3], []),
+    "empty_docs": ([], [(4, 5), (6, 5)]),
+    "empty_both": ([], []),
+    "pair_only_id": ([1, 2], [(2, 9), (9, 8)]),
+}
+
+
+def _union_find(ids, pairs):
+    """{id: (component, n_members, is_keep)} over the non-NULL graph:
+    NULL doc ids and pairs with a NULL end are dropped."""
+    edges = [(a, b) for a, b in pairs if a is not None and b is not None]
+    nodes = np.array(sorted({i for i in ids if i is not None}
+                            | {v for e in edges for v in e}), dtype=np.int64)
+    parent = np.arange(nodes.size)
+    idx = {int(v): i for i, v in enumerate(nodes)}
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for a, b in edges:
+        ra, rb = find(idx[a]), find(idx[b])
+        parent[max(ra, rb)] = min(ra, rb)   # the root is the min index
+    root = np.array([find(i) for i in range(nodes.size)], dtype=np.int64)
+    size = np.bincount(root, minlength=nodes.size)
+    return {int(v): (int(nodes[r]), int(size[r]), int(v) == int(nodes[r]))
+            for v, r in zip(nodes, root)}
+
+
+@pytest.mark.parametrize("case", list(COMPONENT_CASES))
+def test_dedup_components_degenerate(spark, case):
+    ids, pairs = COMPONENT_CASES[case]
+    docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    prs = spark.createDataFrame(pairs, "a long, b long")
+    rows = dedup_components(docs, prs).collect()
+    got = {r["doc_id"]: (r["component"], r["n_members"], r["is_keep"])
+           for r in rows}
+    assert len(rows) == len(got)          # one row per node, no NULL id
+    assert None not in got
+    assert got == _union_find(ids, pairs)

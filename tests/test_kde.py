@@ -96,3 +96,41 @@ def test_oracle_parity_sf0001(spark):
                          cell_size=5.0, bandwidth=10.0)
     want = {c: (n, k) for c, n, k in con.execute(sql).fetchall()}
     assert got == want and len(want) > 50
+
+
+def test_wide_ring_matches_numpy_bruteforce(spark):
+    """Ring 20 (bandwidth 5 on 0.25 cells) against a numpy brute force
+    over every cell near a point.  The support ring is built per row, not
+    as a literal array: a 41x41 literal blew codegen's 64 KB method
+    limit and then the driver heap."""
+    import numpy as np
+
+    cell_size, bandwidth, scale = 0.25, 5.0, 10 ** 9
+    assert _kde_ring(bandwidth, cell_size) == 20
+    rng = np.random.default_rng(11)
+    xy = np.round(rng.uniform(-3.0, 3.0, size=(40, 2)), 3)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    got = {r["cell"]: (r["n_pts"], r["kde_fp"])
+           for r in kde_grid(df, cell_size=cell_size,
+                             bandwidth=bandwidth).collect()}
+
+    ix = np.floor((xy[:, 0] + 180.0) / cell_size).astype(np.int64)
+    iy = np.floor((xy[:, 1] + 90.0) / cell_size).astype(np.int64)
+    # every cell within ring 22 of a point: wider than the ring on purpose
+    cx_i = np.arange(ix.min() - 22, ix.max() + 23)
+    cy_i = np.arange(iy.min() - 22, iy.max() + 23)
+    cells = (cx_i[:, None] * CELL_M + cy_i[None, :]).ravel()
+    cx = ((cells - cells % CELL_M) / CELL_M + 0.5) * cell_size - 180.0
+    cy = ((cells % CELL_M) + 0.5) * cell_size - 90.0
+    dx = xy[None, :, 0] - cx[:, None]
+    dy = xy[None, :, 1] - cy[:, None]
+    d2 = dx * dx + dy * dy
+    h2 = bandwidth * bandwidth
+    t = d2 / h2
+    w = np.where(d2 < h2, np.floor((1.0 - t) * (1.0 - t) * float(scale)), 0)
+    n = (d2 < h2).sum(axis=1)
+    want = {int(c): (int(k), int(s))
+            for c, k, s in zip(cells, n, w.sum(axis=1).astype(np.int64))
+            if k}
+    assert got == want and len(want) > 1000
